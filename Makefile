@@ -7,7 +7,7 @@ package:
 	@echo built dist/web3research_etl_spark.zip
 
 test:
-	python -m pytest tests/ -x -q
+	python -m pytest tests/ perfbench/tests -x -q
 
 oracle:
 	python tools/oracle_check.py /root/testdata/sf0.01

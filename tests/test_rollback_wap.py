@@ -60,17 +60,25 @@ EPOCHS = {
 }
 
 
-def _apply(t, spark, epochs):
+def _apply(t, spark, epochs, ids=None):
     for e in epochs:
-        t.merge_changelog(_batch(spark, EPOCHS[e]), epoch_id=e)
+        t.merge_changelog(_batch(spark, EPOCHS[e]), epoch_id=e if ids is None else ids[e])
 
 
 def test_rollback_restores_state_and_reopens_epochs(spark, tmp_table_dir):
-    t = _table(spark, tmp_table_dir)
-    _apply(t, spark, [1, 2])
+    _check_rollback(spark, f"{tmp_table_dir}/a", {1: 1, 2: 2, 3: 3, 4: 4}, [1, 2], [3, 4])
+    # reopened epochs sort numerically, not as strings ([1, 10, 2])
+    _check_rollback(spark, f"{tmp_table_dir}/b", {1: 0, 2: 1, 3: 2, 4: 10}, [1], [1, 2, 10])
+
+
+def _check_rollback(spark, d, ids, kept, reopened):
+    """Apply EPOCHS under epoch ``ids``, roll back to after ``kept``."""
+    undone = [e for e in EPOCHS if e not in kept]
+    t = _table(spark, d)
+    _apply(t, spark, kept, ids)
     s2 = t.current_snapshot()["snapshot_id"]
     h2 = t.state_hash()
-    _apply(t, spark, [3, 4])
+    _apply(t, spark, undone, ids)
     head = t.current_snapshot()["snapshot_id"]
     h4 = t.state_hash()
     assert h4 != h2
@@ -78,16 +86,16 @@ def test_rollback_restores_state_and_reopens_epochs(spark, tmp_table_dir):
     res = t.rollback_to(s2)
     assert res["skipped"] is False
     assert res["rolled_back_to"] == s2
-    assert res["reopened_epochs"] == [3, 4]
+    assert res["reopened_epochs"] == reopened
     assert t.state_hash() == h2
     # history is append-only: the undone head still time-travels
     assert t.state_hash(head) == h4
 
     # the idempotence ledger rewound WITH the data: already-applied
     # epochs still skip, the undone ones re-apply and reconverge
-    r = t.merge_changelog(_batch(spark, EPOCHS[2]), epoch_id=2)
+    r = t.merge_changelog(_batch(spark, EPOCHS[kept[-1]]), epoch_id=ids[kept[-1]])
     assert r["skipped"] is True
-    _apply(t, spark, [3, 4])
+    _apply(t, spark, undone, ids)
     assert t.state_hash() == h4
 
 
@@ -217,6 +225,22 @@ def test_wap_epoch_binds_at_publish_not_stage(spark, tmp_table_dir):
     # now the staged copy is redundant: publish resolves to a no-op
     # through the ledger instead of double-applying
     assert t.publish_staged("w")["already_published"] is True
+
+
+def test_wap_publishes_epochless_staged_merge_on_table_with_history(
+    spark, tmp_table_dir
+):
+    """A staged merge without an epoch marker adds no epoch, so its
+    idempotence check must not read the parent's cumulative epochs as
+    its own — that reported already_published and dropped the batch."""
+    t = _table(spark, tmp_table_dir)
+    _apply(t, spark, [1, 2])
+    t.merge_changelog(_batch(spark, EPOCHS[3]), stage_wap_id="no-epoch")
+    staged_rows = {(r["url"], r["v"]) for r in t.read_staged("no-epoch").collect()}
+    pub = t.publish_staged("no-epoch")
+    assert pub["already_published"] is False
+    assert {(r["url"], r["v"]) for r in t.read().collect()} == staged_rows
+    assert staged_rows == {("a", "a2"), ("c", "c2")}
 
 
 def test_wap_staged_mor_merge(spark, tmp_table_dir):

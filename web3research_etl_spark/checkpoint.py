@@ -40,9 +40,12 @@ def checkpoint_dir(spark) -> str | None:
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Cut ``df``'s lineage: durable ``checkpoint()`` when a checkpoint
     dir is configured (cluster fault tolerance), else
-    ``localCheckpoint()`` (single-machine speed). ``eager=False`` defers
-    materialization to the caller's next action — use when that action
-    immediately follows (saves one job per iteration round)."""
+    ``localCheckpoint()`` (single-machine speed). ``eager=False`` skips
+    the eager count job, but it does not make the call free: with
+    adaptive query execution on (the session default) Spark runs the
+    plan's shuffle stages at call time to plan the checkpoint — one job
+    for a groupBy — and only the final stage waits for the caller's
+    first action (0 jobs at call time with AQE off)."""
     spark = df.sparkSession
     target = checkpoint_dir(spark)
     if target:

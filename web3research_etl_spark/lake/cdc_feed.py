@@ -13,7 +13,11 @@ This is the pragmatic scale shape for lake CDC (Iceberg deployments
 materialize change topics the same way): the diff is computed ONCE,
 bucket-pruned, by the publisher — not recomputed by every consumer —
 and the feed directory partitions naturally by snapshot so consumers
-resume by file-source checkpoint alone.
+resume by file-source checkpoint alone. Compaction and clustering
+commits change no row: they are skipped from manifest metadata, with
+no Spark job and no directory. Inside ``run_sync`` the head snapshot's
+diff is the sidecar pass's one shared change span (``change_span``),
+read once for the feed, the view and the search index.
 
 Delivery contract: at-least-once with idempotent payloads. The
 publisher bumps its state file only AFTER a snapshot's directory is
@@ -52,6 +56,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from web3research_etl_spark.lake.change_span import ChangeSpan, SpanRead
+from web3research_etl_spark.lake.table import REWRITE_OPERATIONS
+
 _STATE_FILE = "_feed_state.json"
 _log = logging.getLogger(__name__)
 
@@ -88,13 +95,9 @@ def feed_schema(table, payloads: bool = False, out_dir: str | None = None) -> T.
         state = _load_state(out_dir)
         if "schema_json" in state:
             return T.StructType.fromJson(json.loads(state["schema_json"]))
-    snap = table.current_snapshot()
-    key, vorder = set(snap["key"]), snap["version_order"]
-    fields = table.schema(snap).fields
-    ver_fields = [f for f in fields if f.name in set(vorder)]
-    pay_fields = [f for f in fields if f.name not in key | set(vorder)] if payloads else []
+    key_fields, ver_fields, pay_fields = _feed_fields(table, table.current_snapshot(), payloads)
     return T.StructType(
-        [f for f in fields if f.name in key]
+        key_fields
         + [T.StructField("change_type", T.StringType(), False)]
         + [T.StructField(f"new_{f.name}", f.dataType, True) for f in ver_fields]
         + [T.StructField(f"old_{f.name}", f.dataType, True) for f in ver_fields]
@@ -106,18 +109,43 @@ def feed_schema(table, payloads: bool = False, out_dir: str | None = None) -> T.
     )
 
 
-def _epoch_of(table, snap: dict) -> Any:
-    """The epoch marker this snapshot committed, if any: committed_epochs
-    grows by (at most) one element per commit, so the new tail element
-    vs the parent's list IS this snapshot's epoch."""
-    parent_id = snap.get("parent")
-    parent_epochs = (
-        table.snapshot(parent_id)["summary"].get("committed_epochs", [])
-        if parent_id is not None
-        else []
+def _feed_fields(table, snap: dict, payloads: bool) -> tuple[list, list, list]:
+    """(key, version, payload) fields of ``snap``'s schema in schema
+    order — the order ``read_changes`` lays its columns out in."""
+    key, vorder = set(snap["key"]), set(snap["version_order"])
+    fields = table.schema(snap).fields
+    return (
+        [f for f in fields if f.name in key],
+        [f for f in fields if f.name in vorder],
+        [f for f in fields if f.name not in key | vorder] if payloads else [],
     )
-    epochs = snap["summary"].get("committed_epochs", [])
-    return epochs[-1] if len(epochs) > len(parent_epochs) else None
+
+
+def _epoch_of(table, snap: dict) -> Any:
+    """The epoch marker this snapshot committed, if any (a commit adds
+    at most one)."""
+    added = table.added_epochs(snap)
+    return added[-1] if added else None
+
+
+def _span_read(table, snap: dict, payloads: bool) -> SpanRead:
+    """The columns of ``read_changes(parent, snap, include_payload=
+    payloads)``, in its order: what the feed publishes for ``snap``."""
+    key_fields, ver_fields, pay_fields = _feed_fields(table, snap, payloads)
+    names = (
+        [f.name for f in key_fields]
+        + ["change_type"]
+        + [f"new_{f.name}" for f in ver_fields]
+        + [f"old_{f.name}" for f in ver_fields]
+        + [f.name for f in pay_fields]
+    )
+    return SpanRead({n: F.col(n) for n in names}, payload=payloads)
+
+
+def feed_span_need(table, out_dir: str, payloads: bool = False) -> tuple:
+    """(published-through marker, SpanRead) for ``change_span.open_span``."""
+    read = _span_read(table, table.current_snapshot(), payloads)
+    return _load_state(out_dir)["published_through"], read
 
 
 def _full_state_changes(table, sid: int, payloads: bool) -> DataFrame:
@@ -129,14 +157,10 @@ def _full_state_changes(table, sid: int, payloads: bool) -> DataFrame:
     once redelivery of already-seen keys is harmless by contract."""
     from web3research_etl_spark.lake.table import _DELETED_COL
 
-    snap = table.snapshot(sid)
-    key, vorder = set(snap["key"]), snap["version_order"]
-    fields = table.schema(snap).fields
-    ver_fields = [f for f in fields if f.name in set(vorder)]
-    pay_fields = [f for f in fields if f.name not in key | set(vorder)] if payloads else []
+    key_fields, ver_fields, pay_fields = _feed_fields(table, table.snapshot(sid), payloads)
     full = table.read(snapshot_id=sid, include_deleted=True)
     dead = F.coalesce(F.col(_DELETED_COL), F.lit(False))
-    sel = [F.col(f.name) for f in fields if f.name in key]
+    sel = [F.col(f.name) for f in key_fields]
     sel.append(F.when(dead, F.lit("delete")).otherwise(F.lit("insert")).alias("change_type"))
     sel += [F.col(f.name).alias(f"new_{f.name}") for f in ver_fields]
     sel += [F.lit(None).cast(f.dataType).alias(f"old_{f.name}") for f in ver_fields]
@@ -173,37 +197,52 @@ def _align_to_pinned(out: DataFrame, pinned: list[str]) -> DataFrame:
     )
 
 
-def publish_changes(table, out_dir: str, payloads: bool = False) -> dict:
+def publish_changes(
+    table, out_dir: str, payloads: bool = False, span: ChangeSpan | None = None
+) -> dict:
     """Publish every not-yet-published data snapshot's diff to the feed.
 
     ``payloads=True`` rides the newer side's data columns along with
     every insert/update row (null for deletes) — a feed a downstream
     mirror can replicate from (see ``apply_feed``).
 
+    ``span`` (``lake/change_span.open_span``, as ``run_sync`` passes
+    it) pins the pass to ``span.head``, and the head snapshot's diff
+    is taken from the shared span read when it covers that snapshot.
+
     Returns {"published": [snapshot ids], "through": last_id,
-    "gap_bridged": [ids published as full state]}. Pure metadata
-    snapshots (schema evolution, compaction that rewrote no live rows)
-    produce empty diffs and publish no directory — consumers never see
-    them. A snapshot whose parent manifest was removed by
-    ``expire_snapshots`` is bridged with a full-state publish instead of
-    wedging the stream (ADVICE r02)."""
+    "gap_bridged": [ids published as full state]}. Compaction and
+    clustering commits (``REWRITE_OPERATIONS``) are skipped from
+    metadata, without a Spark job; other pure metadata snapshots
+    (schema evolution) produce empty diffs. Neither publishes a
+    directory — consumers never see them. A snapshot whose parent
+    manifest was removed by ``expire_snapshots`` is bridged with a
+    full-state publish instead of wedging the stream (ADVICE r02) —
+    a rewrite commit included, since the expired parent's own changes
+    were never published."""
     os.makedirs(out_dir, exist_ok=True)
     state = _load_state(out_dir)
     ids = table.snapshot_ids()
+    listed = set(ids)
     start_after = state["published_through"]
-    todo = [s for s in ids if start_after is None or s > start_after]
+    todo = [
+        s for s in ids
+        if (start_after is None or s > start_after) and (span is None or s <= span.head)
+    ]
     published: list[int] = []
     bridged: list[int] = []
     for sid in todo:
         snap = table.snapshot(sid)
         parent = snap.get("parent")
-        if parent is None:
-            # snapshot 0 is CREATE — empty table, nothing to diff
+        if parent is None or (snap["operation"] in REWRITE_OPERATIONS and parent in listed):
+            # snapshot 0 is CREATE — empty table, nothing to diff; a
+            # rewrite commit changes no row, and its listed parent was
+            # published before it (or in this pass)
             state["published_through"] = sid
             _store_state(out_dir, state)
             continue
         try:
-            chg = table.read_changes(parent, sid, include_payload=payloads)
+            chg = _span_read(table, snap, payloads).changes(table, parent, sid, span)
             epoch = _epoch_of(table, snap)
         except FileNotFoundError:
             # parent manifest expired (maintain --expire-keep) — the diff

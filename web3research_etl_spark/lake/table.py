@@ -77,6 +77,10 @@ _BUCKET_COL = "_bucket"
 # has passed. (The reference has no tombstones — a reorg delete followed
 # by a replayed stale insert WOULD resurrect; found by our streaming test.)
 _DELETED_COL = "_deleted"
+# Commits that rewrite the resolved rows (tombstones included) unchanged:
+# the table's logical state before and after one is identical, so a
+# change span skips them from manifest metadata alone.
+REWRITE_OPERATIONS = frozenset({"compact", "cluster"})
 
 
 def _parse_type(ddl: str) -> T.DataType:
@@ -358,6 +362,15 @@ class LakeTable:
         snap = snap or self.current_snapshot()
         return set(snap["summary"].get("committed_epochs", []))
 
+    def added_epochs(self, snap: dict) -> list:
+        """The epoch markers ``snap`` itself committed: its cumulative
+        ``committed_epochs`` minus its parent's. A snapshot whose
+        cumulative list only restates history (an epoch-less merge, a
+        compaction, a rollback) added none."""
+        parent = snap.get("parent")
+        before = self.committed_epochs(self.snapshot(parent)) if parent is not None else set()
+        return [e for e in snap["summary"].get("committed_epochs", []) if e not in before]
+
     def synthetic_epoch_id(self, kind: str = "heal") -> int:
         """Integer epoch for out-of-band applies (heal, replay-tail).
 
@@ -516,6 +529,13 @@ class LakeTable:
         incremental-view-maintenance consumer needs to retract a
         deleted/updated row's old contribution from a downstream
         aggregate without re-reading any base state.
+
+        Compaction and clustering commits (``REWRITE_OPERATIONS``) are
+        skipped from manifest metadata alone: a span holding only such
+        commits is empty and runs no Spark job, and a span that starts
+        right before them is diffed from the rewritten snapshot — whose
+        buckets are single base groups, so the older side reads without
+        a merge-on-read resolve (see ``effective_span``).
         """
         if to_snapshot_id <= from_snapshot_id:
             raise ValueError("read_changes requires from_snapshot_id < to_snapshot_id")
@@ -525,6 +545,7 @@ class LakeTable:
         vorder = snap_b["version_order"]
         if not key or not vorder:
             raise ValueError("read_changes requires key + version_order")
+        span = self._effective_span(snap_a, snap_b)
 
         def _paths_by_bucket(snap: dict) -> dict[int, tuple]:
             # a bucket may hold several file groups (appends, MoR delta
@@ -535,8 +556,11 @@ class LakeTable:
                 out.setdefault(fg["bucket"], []).extend(fg["paths"])
             return {b: tuple(sorted(ps)) for b, ps in out.items()}
 
-        pa, pb = _paths_by_bucket(snap_a), _paths_by_bucket(snap_b)
-        changed = {b for b in set(pa) | set(pb) if pa.get(b) != pb.get(b)}
+        changed: set[int] = set()
+        if span is not None:
+            old_snap, new_snap = span
+            pa, pb = _paths_by_bucket(old_snap), _paths_by_bucket(new_snap)
+            changed = {b for b in set(pa) | set(pb) if pa.get(b) != pb.get(b)}
         schema_b = self.schema(snap_b)
         ver_fields = [f for f in schema_b.fields if f.name in set(vorder)]
         payload_fields = (
@@ -584,8 +608,8 @@ class LakeTable:
 
         pay_names = [f.name for f in payload_fields]
         old_pay = pay_names if include_before else []
-        old_k = _side(snap_a).select(*key, *vorder, *old_pay, _DELETED_COL).alias("o")
-        new_k = _side(snap_b).select(*key, *vorder, *pay_names, _DELETED_COL).alias("n")
+        old_k = _side(old_snap).select(*key, *vorder, *old_pay, _DELETED_COL).alias("o")
+        new_k = _side(new_snap).select(*key, *vorder, *pay_names, _DELETED_COL).alias("n")
         cond = None
         for k in key:
             c = F.col(f"o.{k}") == F.col(f"n.{k}")
@@ -623,6 +647,45 @@ class LakeTable:
             .filter(F.col("change_type").isNotNull())
             .select(*sel_key, "change_type", *sel_ver, *sel_pay, *sel_before)
         )
+
+    def effective_span(self, from_snapshot_id: int, to_snapshot_id: int) -> tuple[int, int] | None:
+        """The snapshot pair ``read_changes(from, to)`` actually diffs, or
+        None when the span holds only rewrite commits (no changes). Two
+        spans with the same effective pair return the same rows — the
+        test a change-span consumer runs to reuse a span read for
+        another marker (``lake/change_span.py``). Metadata only."""
+        span = self._effective_span(
+            self.snapshot(from_snapshot_id), self.snapshot(to_snapshot_id)
+        )
+        return None if span is None else (span[0]["snapshot_id"], span[1]["snapshot_id"])
+
+    def _effective_span(self, snap_a: dict, snap_b: dict) -> tuple[dict, dict] | None:
+        """Move both ends of a span past the rewrite commits at its edges:
+        the end back over trailing ones (to the snapshot they rewrote) and
+        the start forward over the ones that directly follow it on the
+        published chain. Each move stays on a logically identical state,
+        so the diff is unchanged; None when the ends meet."""
+        a_id = snap_a["snapshot_id"]
+        while (
+            snap_b["operation"] in REWRITE_OPERATIONS
+            and snap_b.get("parent") is not None
+            and snap_b["parent"] >= a_id
+        ):
+            snap_b = self.snapshot(snap_b["parent"])
+        if snap_b["snapshot_id"] == a_id:
+            return None
+        for sid in self.snapshot_ids():
+            if sid <= a_id:
+                continue
+            if sid >= snap_b["snapshot_id"]:
+                break
+            nxt = self.snapshot(sid)
+            if "staged" in nxt:
+                continue
+            if nxt.get("parent") != snap_a["snapshot_id"] or nxt["operation"] not in REWRITE_OPERATIONS:
+                break
+            snap_a = nxt
+        return snap_a, snap_b
 
     # --------------------------------------------------------------- write
     def _write_data_files(
@@ -2038,8 +2101,7 @@ class LakeTable:
                     "rolled_back_to": snapshot_id,
                     "reopened_epochs": sorted(
                         set(cur["summary"].get("committed_epochs", []))
-                        - set(summary.get("committed_epochs", [])),
-                        key=str,
+                        - set(summary.get("committed_epochs", []))
                     ),
                 }
             except CommitConflictError:
@@ -2092,14 +2154,14 @@ class LakeTable:
         Conflict rule (Iceberg cherry-pick's fast-forward case): the
         published head must still be the staged snapshot's parent;
         anything else re-stages against fresh state. Idempotent via
-        the epoch ledger: if every epoch the staged commit added is
-        already published, a retried publish is a no-op."""
+        the epoch ledger: if every epoch the staged commit added over
+        its parent is already published, a retried publish is a no-op.
+        A staged merge that added no epoch always publishes."""
         st = self._find_staged(wap_id)
-        staged_epochs = set(st["summary"].get("committed_epochs", []))
+        staged_epochs = set(self.added_epochs(st))
         while True:
             cur = self.current_snapshot()
-            cur_epochs = set(cur["summary"].get("committed_epochs", []))
-            if staged_epochs and staged_epochs <= cur_epochs:
+            if staged_epochs and staged_epochs <= self.committed_epochs(cur):
                 return {
                     "already_published": True,
                     "snapshot_id": cur["snapshot_id"],

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..checkpoint import materialize
+from ..lake.change_span import ChangeSpan, SpanRead
 from ..lake.table import LakeTable
 
 
@@ -78,7 +80,11 @@ def apply_aggregate_deltas(
     (the view table's bucketed copy-on-write merge); a group whose row
     count reaches zero is deleted. The equi-join against current view
     state is deltas-sized on one side and |groups| on the other — never
-    the base table."""
+    the base table.
+
+    The merge input (at most one row per group) is materialized once:
+    the merge's bucket probe and its write would otherwise each re-run
+    the delta aggregate, and with it the change span under it."""
     gcol, *_ = view.current_snapshot()["key"]
     cur = view.read().select(
         F.col(gcol),
@@ -98,11 +104,34 @@ def apply_aggregate_deltas(
             F.lit(epoch_id).cast("bigint").alias("epoch"),
         )
     )
-    ops = merged.select(
-        F.when(F.col("n_rows") <= 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-        "*",
+    ops = materialize(
+        merged.select(
+            F.when(F.col("n_rows") <= 0, F.lit("D")).otherwise(F.lit("U")).alias("op"),
+            "*",
+        )
     )
     return view.merge_changelog(ops, epoch_id=epoch_id, summary_extra=summary_extra)
+
+
+def _span_read(group_col: str, value_expr) -> SpanRead:
+    """The view's inputs from a change span: both images' group and
+    value (``value_expr`` applied to each)."""
+    return SpanRead(
+        {
+            "change_type": F.col("change_type"),
+            group_col: F.col(group_col),
+            f"old_{group_col}": F.col(f"old_{group_col}"),
+            "_v": value_expr(F.col),
+            "old__v": value_expr(lambda c: F.col(f"old_{c}")),
+        },
+        before=True,
+    )
+
+
+def view_span_need(view: LakeTable, group_col: str, value_expr) -> tuple:
+    """(view_through marker, SpanRead) for ``change_span.open_span``."""
+    through = view.current_snapshot()["summary"].get("view_through")
+    return through, _span_read(group_col, value_expr)
 
 
 def maintain_view(
@@ -114,6 +143,7 @@ def maintain_view(
     value_expr,
     epoch_id: int,
     summary_extra: dict | None = None,
+    span: ChangeSpan | None = None,
 ) -> dict:
     """One IVM step: read the base table's net changes between two
     snapshots (before-images on), derive the value column via
@@ -121,12 +151,10 @@ def maintain_view(
     ``old_``-prefixed image — pass the rounding/decimal cast here so
     retraction cancels exactly), aggregate deltas, fold into the view.
     Folding a multi-epoch span in one step is exact: ``read_changes``
-    returns NET changes, and additive deltas telescope."""
-    chg = base.read_changes(
-        from_snapshot_id, to_snapshot_id, include_before=True
-    )
-    chg = chg.withColumn("_v", value_expr(F.col)).withColumn(
-        "old__v", value_expr(lambda c: F.col(f"old_{c}"))
+    returns NET changes, and additive deltas telescope. A ``span``
+    that covers the two snapshots is read instead of ``read_changes``."""
+    chg = _span_read(group_col, value_expr).changes(
+        base, from_snapshot_id, to_snapshot_id, span
     )
     deltas = aggregate_deltas(chg, group_col, "_v")
     return apply_aggregate_deltas(view, deltas, epoch_id, summary_extra=summary_extra)
@@ -181,7 +209,13 @@ def refresh_view_full(
     )
 
 
-def sync_view(view: LakeTable, base: LakeTable, group_col: str, value_expr) -> dict:
+def sync_view(
+    view: LakeTable,
+    base: LakeTable,
+    group_col: str,
+    value_expr,
+    span: ChangeSpan | None = None,
+) -> dict:
     """Advance the view to the base table's current snapshot — the call
     a streaming pipeline makes after each epoch's merge commit. The
     consumed-through marker lives in the VIEW's own commit summary, so
@@ -190,10 +224,12 @@ def sync_view(view: LakeTable, base: LakeTable, group_col: str, value_expr) -> d
     telescoping) span for the next call. A missing manifest on the
     incremental path (snapshot expiry) falls back to a full refresh.
     Epoch ids are the base snapshot id folded through — re-running the
-    same fold hits the idempotent-skip."""
+    same fold hits the idempotent-skip. A shared ``span``
+    (``lake/change_span``) pins the fold to ``span.head`` and is read
+    when the view's marker reduces to its start."""
     vsnap = view.current_snapshot()
     through = vsnap["summary"].get("view_through")
-    cur = base.current_snapshot()["snapshot_id"]
+    cur = span.head if span is not None else base.current_snapshot()["snapshot_id"]
     if through is None:
         return refresh_view_full(view, base, group_col, value_expr, epoch_id=cur)
     if cur <= through:
@@ -201,7 +237,7 @@ def sync_view(view: LakeTable, base: LakeTable, group_col: str, value_expr) -> d
     try:
         return maintain_view(
             view, base, through, cur, group_col, value_expr,
-            epoch_id=cur, summary_extra={"view_through": cur},
+            epoch_id=cur, summary_extra={"view_through": cur}, span=span,
         )
     except FileNotFoundError:
         return refresh_view_full(view, base, group_col, value_expr, epoch_id=cur)

@@ -82,13 +82,15 @@ def lww_dedup_agg(
     caches this engine deliberately avoids.
 
     materialize_best: same double-consumer problem, solved without an
-    unpersist obligation — the skinny aggregate is lazily cut via
+    unpersist obligation — the skinny aggregate is cut via
     checkpoint.materialize(eager=False) (localCheckpoint, or a durable
-    checkpoint under W3R_CHECKPOINT_DIR), so it computes once on the
-    caller's first action and both consumers read the stored copy.
-    For call sites that hand the returned frame to arbitrary downstream
-    readers (the MoR resolved read) where no caller owns a terminal
-    action to unpersist after.
+    checkpoint under W3R_CHECKPOINT_DIR), so it computes once and both
+    consumers read the stored copy. Not lazy: with AQE on (the session
+    default) its shuffle stage runs when this function is called — one
+    Spark job per call, at call time — and the rest on the caller's
+    first action. For call sites that hand the returned frame to
+    arbitrary downstream readers (the MoR resolved read) where no caller
+    owns a terminal action to unpersist after.
     """
     vcols = [F.col(c) for c in version_order]
     join_cols = key + version_order

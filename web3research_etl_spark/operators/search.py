@@ -457,8 +457,7 @@ def phrase_search(
 
     Plan shape: scan-fused ``contains()`` pre-filters on the raw text
     for every term (substring ⊇ token ⊇ phrase member — conservative,
-    pushed into the parquet scan) plus the whole lowercased phrase when
-    it carries an interior separator, then ONE positional-postings
+    pushed into the parquet scan), then ONE positional-postings
     explode of the surviving docs filtered to the phrase's terms. The
     n-way adjacency is n-1 equi-joins on ``(<id>, pos)`` with the i-th
     term's positions shifted by -i: only skinny (id, pos) pairs

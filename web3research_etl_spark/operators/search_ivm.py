@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from web3research_etl_spark.lake.change_span import ChangeSpan, SpanRead
 from web3research_etl_spark.lake.table import LakeTable
 from web3research_etl_spark.operators.search import doc_lengths, doc_tokens, indexed_postings
 
@@ -118,31 +119,54 @@ def _parse(ddl: str) -> T.DataType:
 
 
 def sync_search_index(
-    index: dict, base: LakeTable, text_col: str = "text"
+    index: dict, base: LakeTable, text_col: str = "text", span: ChangeSpan | None = None
 ) -> dict:
     """Advance both index tables to the base table's current snapshot —
     the call a pipeline makes after each epoch's merge (or on any
-    cadence; spans telescope). Returns per-table fold results."""
+    cadence; spans telescope). Returns per-table fold results. A shared
+    ``span`` (``lake/change_span``) pins both folds to ``span.head`` and
+    is read by each side whose marker reduces to its start."""
     return {
-        "postings": _sync_one(index, base, text_col, postings_side=True),
-        "lengths": _sync_one(index, base, text_col, postings_side=False),
+        "postings": _sync_one(index, base, text_col, True, span),
+        "lengths": _sync_one(index, base, text_col, False, span),
     }
 
 
-def _sync_one(index: dict, base: LakeTable, text_col: str, postings_side: bool) -> dict:
+def _span_read(id_col: str, text_col: str) -> SpanRead:
+    """The index's inputs from a change span: the key and both images'
+    text."""
+    names = [id_col, "change_type", text_col, f"old_{text_col}"]
+    return SpanRead({n: F.col(n) for n in names}, payload=True, before=True)
+
+
+def index_span_needs(index: dict, text_col: str = "text") -> list[tuple]:
+    """(index_through marker, SpanRead) of both index tables, for
+    ``change_span.open_span``."""
+    read = _span_read(index["id_name"], text_col)
+    return [
+        (index[side].current_snapshot()["summary"].get(_THROUGH), read)
+        for side in ("postings", "lengths")
+    ]
+
+
+def _sync_one(
+    index: dict,
+    base: LakeTable,
+    text_col: str,
+    postings_side: bool,
+    span: ChangeSpan | None,
+) -> dict:
     tbl: LakeTable = index["postings"] if postings_side else index["lengths"]
     id_col = index["id_name"]
     snap = tbl.current_snapshot()
     through = snap["summary"].get(_THROUGH)
-    cur = base.current_snapshot()["snapshot_id"]
+    cur = span.head if span is not None else base.current_snapshot()["snapshot_id"]
     if through is not None and cur <= through:
         return {"skipped": True, "snapshot_id": snap["snapshot_id"]}
     if through is None:
         return _rebuild_one(tbl, base, text_col, id_col, cur, postings_side)
     try:
-        chg = base.read_changes(
-            through, cur, include_payload=True, include_before=True
-        )
+        chg = _span_read(id_col, text_col).changes(base, through, cur, span)
     except FileNotFoundError:
         return _rebuild_one(tbl, base, text_col, id_col, cur, postings_side)
     rows = (

@@ -209,6 +209,18 @@ def run_sync(
     and it rides the same sidecar thread under ``sidecar_async``.
     ``search_text_col`` names the tokenized column (default ``text``).
 
+    One change span per pass: the feed, the view and both index tables
+    each keep their own consumed-through marker, but after an epoch the
+    sidecar pass reads the base table's change span ONCE — the span
+    most markers reduce to, projected to the columns those consumers
+    read and persisted — hands it to every fold, and unpersists it when
+    the pass ends (``lake/change_span``). A consumer whose marker does
+    not reduce to that span's start reads its own span as it would
+    alone. Markers reduce across compaction and clustering commits,
+    which ``read_changes`` and the feed skip from manifest metadata:
+    they rewrite the resolved rows unchanged, so the previous epoch's
+    maintenance adds no read to this epoch's span.
+
     ``sidecar_async=True`` moves the feed publish + view fold OFF the
     epoch critical path: they run in a background thread that OVERLAPS
     the next epoch's merge (VERDICT r4 next #2 — they were a fixed
@@ -247,23 +259,36 @@ def run_sync(
     sidecar_state: dict = {"thread": None, "error": None}
 
     def _run_sidecars() -> None:
+        from web3research_etl_spark.lake import cdc_feed
+        from web3research_etl_spark.lake.change_span import open_span
+        from web3research_etl_spark.operators import ivm, search_ivm
+
+        span = None
         try:
+            # the pass's one change-span read, shared by every consumer
+            # whose marker reduces to its start (lake/change_span)
+            needs = []
             if feed_dir is not None:
-                from web3research_etl_spark.lake.cdc_feed import publish_changes
-
-                publish_changes(table, feed_dir, payloads=feed_payloads)
+                needs.append(cdc_feed.feed_span_need(table, feed_dir, payloads=feed_payloads))
             if view is not None:
-                from web3research_etl_spark.operators.ivm import sync_view
-
-                sync_view(view, table, view_group, view_value)
+                needs.append(ivm.view_span_need(view, view_group, view_value))
             if search_index is not None:
-                from web3research_etl_spark.operators.search_ivm import (
-                    sync_search_index,
+                needs += search_ivm.index_span_needs(search_index, text_col=search_text_col)
+            if needs:
+                span = open_span(table, table.current_snapshot()["snapshot_id"], needs)
+            if feed_dir is not None:
+                cdc_feed.publish_changes(table, feed_dir, payloads=feed_payloads, span=span)
+            if view is not None:
+                ivm.sync_view(view, table, view_group, view_value, span=span)
+            if search_index is not None:
+                search_ivm.sync_search_index(
+                    search_index, table, text_col=search_text_col, span=span
                 )
-
-                sync_search_index(search_index, table, text_col=search_text_col)
         except Exception as e:  # surfaced at the next join point
             sidecar_state["error"] = e
+        finally:
+            if span is not None:
+                span.df.unpersist()
 
     def _join_sidecars() -> None:
         t = sidecar_state["thread"]
