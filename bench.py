@@ -302,7 +302,7 @@ def bench_cdc_subprocess(
     cpus: int,
     changelog_dir: str,
     n_events: int,
-    write_mode: str | None = None,
+    write_mode: str = "cow",
     max_files_per_trigger: int = 32,
     bloom_probe: bool = False,
     zorder_probe: bool = False,
@@ -379,7 +379,7 @@ def bench_cdc(
     cpus: int,
     changelog_dir: str,
     n_events: int,
-    write_mode: str | None = None,
+    write_mode: str = "cow",
     max_files_per_trigger: int = 32,
     bloom_probe: bool = False,
     zorder_probe: bool = False,
@@ -533,7 +533,7 @@ def bench_cdc(
     steady_eps = ev_per_epoch * len(steady) / (sum(steady) / 1000.0)
     out = {
         "cpus": cpus,
-        "write_mode": write_mode or "cow",
+        "write_mode": write_mode,
         "wall_sec": round(dt, 3),
         "events_per_sec": round(n_events / dt, 1),
         "steady_events_per_sec": round(steady_eps, 1),

@@ -124,6 +124,37 @@ def test_publish_crash_idempotent_and_skips_metadata_snapshots(spark, tmp_path):
     assert rep["through"] == t.current_snapshot()["snapshot_id"]
 
 
+def test_feed_skips_staged_wap_snapshots(spark, tmp_path):
+    """A write-audit-publish snapshot still staged is off the published
+    chain: the feed must not publish it (an abandoned stage would leave
+    rows a mirror has but the source never got), and publishing the
+    stage puts its diff in the feed exactly once."""
+    t = _table(spark, tmp_path)
+    feed = f"{tmp_path}/feed"
+    r1 = t.merge_changelog(
+        _batch(spark, [("I", "a", 100, 1, "a1"), ("I", "b", 100, 2, "b1")]), epoch_id=1
+    )["snapshot_id"]
+    publish_changes(t, feed)
+    epoch2 = [("U", "a", 200, 3, "a2"), ("I", "c", 200, 4, "c1")]
+
+    staged = t.merge_changelog(_batch(spark, epoch2), epoch_id=2, stage_wap_id="w2")
+    assert publish_changes(t, feed)["published"] == []
+    t.abandon_staged("w2")
+    assert not os.path.exists(f"{feed}/s{staged['snapshot_id']:08d}")
+
+    t.merge_changelog(_batch(spark, epoch2), epoch_id=2, stage_wap_id="w2b")
+    assert publish_changes(t, feed)["published"] == []
+    pub = t.publish_staged("w2b")["snapshot_id"]
+    assert publish_changes(t, feed)["published"] == [pub]
+    rows = spark.read.schema(feed_schema(t)).parquet(f"{feed}/s*").collect()
+    assert sorted((r["snapshot_id"], r["url"], r["change_type"]) for r in rows) == [
+        (r1, "a", "insert"),
+        (r1, "b", "insert"),
+        (pub, "a", "update"),
+        (pub, "c", "insert"),
+    ]
+
+
 def test_payload_feed_replicates_to_mirror(spark, tmp_path):
     """The full replication loop: source merges (inserts, updates, a
     delete, a stale update, a post-delete re-insert) → payload feed →

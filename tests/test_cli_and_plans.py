@@ -102,22 +102,6 @@ def test_lww_shuffle_hash_plan(spark):
     _assert_no_payload_sort(plan)
 
 
-def test_lww_broadcast_plan(spark):
-    """Broadcast path: both winner sets broadcast — the payload side is
-    filtered in place, shuffled by nothing."""
-    from web3research_etl_spark.operators.lww import lww_dedup_agg
-
-    plan = _physical_plan(
-        lww_dedup_agg(
-            _lww_test_input(spark), ["url"], ["warc_ts", "event_seq"],
-            winner_join="broadcast",
-        )
-    )
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-    assert "ShuffledHashJoin" not in plan
-    _assert_no_payload_sort(plan)
-
-
 def test_lake_read_filter_pushdown(spark, tmp_table_dir):
     """A key-equality filter on a lake read must reach the parquet scan
     (PushedFilters), not run post-scan only."""

@@ -360,44 +360,3 @@ def test_heal_repairs_mor_table(spark, tmp_table_dir):
         assert rep2.filter(F.col("status") != "ok").count() == 0
     finally:
         ch.unpersist()
-
-
-def test_heal_works_under_mor_env_default(spark, tmp_table_dir, monkeypatch):
-    """heal() pins write_mode='cow' explicitly (ADVICE r03): in a MoR
-    deployment WEB3R_WRITE_MODE=mor is exported process-wide, and heal's
-    force_replace merge must NOT inherit it (force_replace is CoW-only —
-    inheriting raised ValueError and broke the repair path exactly where
-    MoR tables need it)."""
-    from web3research_etl_spark.changelog import generate_changelog
-    from web3research_etl_spark.operators.reconcile import (
-        expected_state,
-        heal,
-        reconcile,
-    )
-    from web3research_etl_spark.schemas import PAGES_KEY, PAGES_SCHEMA, PAGES_VERSION_ORDER
-
-    monkeypatch.setenv("WEB3R_WRITE_MODE", "mor")
-    ch = generate_changelog(spark, 800).cache()
-    try:
-        t = LakeTable.create(
-            spark, os.path.join(tmp_table_dir, "heal_mor_env"), PAGES_SCHEMA,
-            key=PAGES_KEY, version_order=PAGES_VERSION_ORDER, n_buckets=4,
-        )
-        # env default applies to the normal merges (delta groups appear)
-        t.merge_changelog(ch, epoch_id=0)
-        assert _delta_groups(t)
-        victim = t.read().select("url", "warc_ts", "event_seq").limit(1).collect()[0]
-        bogus = spark.createDataFrame(
-            [("D", victim["url"], victim["warc_ts"], victim["event_seq"] + 10**6,
-              None, None)],
-            "op string, url string, warc_ts timestamp, event_seq long, "
-            "html binary, lang string",
-        )
-        t.merge_changelog(bogus, epoch_id=1)
-        rep = reconcile(t.read(), expected_state(ch))
-        assert rep.filter(F.col("status") != "ok").count() >= 1
-        heal(t, ch, epoch_id=99)  # must not raise despite env mor
-        rep2 = reconcile(t.read(), expected_state(ch))
-        assert rep2.filter(F.col("status") != "ok").count() == 0
-    finally:
-        ch.unpersist()

@@ -284,6 +284,35 @@ def test_multi_epoch_span_telescopes(spark, tmp_table_dir, base_docs_table):
     assert _live_postings(lazy) == want
 
 
+def test_index_self_heals_after_snapshot_expiry(spark, tmp_table_dir, base_docs_table):
+    """Snapshot expiry breaking the incremental chain falls back to one
+    rebuild per side — including deleting the rows of docs that vanished
+    meanwhile."""
+    base = base_docs_table
+    idx = create_search_index(spark, f"{tmp_table_dir}/idx", "doc_id", "bigint")
+    _apply_epoch(base, spark, [
+        ("U", 1, "alpha beta"),
+        ("U", 2, "beta gamma"),
+        ("U", 3, "gamma delta"),
+    ], epoch=1, ver=1)
+    sync_search_index(idx, base)
+    _apply_epoch(base, spark, [("D", 2, None)], epoch=2, ver=2)
+    _apply_epoch(base, spark, [("U", 3, "omega")], epoch=3, ver=3)
+    base.expire_snapshots(retain_last=1)
+
+    r = sync_search_index(idx, base)
+    assert not r["postings"].get("skipped") and not r["lengths"].get("skipped")
+    fresh = create_search_index(spark, f"{tmp_table_dir}/fresh", "doc_id", "bigint")
+    sync_search_index(fresh, base)
+    assert _live_postings(idx) == _live_postings(fresh)
+
+    def lengths(index):
+        return sorted((x.doc_id, x.dl) for x in index["lengths"].read().collect())
+
+    assert lengths(idx) == lengths(fresh) == [(1, 2), (3, 1)]
+    assert not any(d == 2 for (_, d, _, _) in _live_postings(idx))
+
+
 def test_run_sync_maintains_search_index_in_stream(spark, tmp_table_dir):
     """run_sync(search_index=...) folds the index after every
     micro-batch, in the same sidecar braid as feed/view: the final

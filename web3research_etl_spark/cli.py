@@ -74,7 +74,7 @@ def _write_mode_flag(sub: argparse.ArgumentParser) -> None:
     # mode surprising)
     sub.add_argument(
         "--write-mode",
-        default=None,
+        default="cow",
         choices=["cow", "mor"],
         help="merge strategy: cow (default) rewrites touched buckets per "
         "epoch; mor appends the epoch's winners as merge-on-read delta "
@@ -683,7 +683,7 @@ def main(argv: list[str] | None = None) -> int:
                 else None
             ),
             maintain_cluster_files=getattr(args, "maintain_cluster_files", 8),
-            write_mode=getattr(args, "write_mode", None),
+            write_mode=getattr(args, "write_mode", "cow"),
             sidecar_async=getattr(args, "async_sidecars", False),
             search_index=search_index,
             search_text_col=getattr(args, "search_text_col", "text"),

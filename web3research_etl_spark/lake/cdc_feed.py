@@ -201,6 +201,8 @@ def publish_changes(
     table, out_dir: str, payloads: bool = False, span: ChangeSpan | None = None
 ) -> dict:
     """Publish every not-yet-published data snapshot's diff to the feed.
+    Only the published chain counts: write-audit-publish snapshots
+    still staged are skipped, the same chain the view and index fold.
 
     ``payloads=True`` rides the newer side's data columns along with
     every insert/update row (null for deletes) — a feed a downstream
@@ -233,6 +235,10 @@ def publish_changes(
     bridged: list[int] = []
     for sid in todo:
         snap = table.snapshot(sid)
+        if "staged" in snap:
+            # WAP-staged: off the published chain until publish_staged
+            # re-commits it under a new id (or abandon_staged drops it)
+            continue
         parent = snap.get("parent")
         if parent is None or (snap["operation"] in REWRITE_OPERATIONS and parent in listed):
             # snapshot 0 is CREATE — empty table, nothing to diff; a

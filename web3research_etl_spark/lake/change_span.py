@@ -1,29 +1,32 @@
-"""One change span per sidecar pass: the shared read of the fold protocol.
+"""The fold protocol of every derived LakeTable, and the one change span
+per sidecar pass its consumers share.
 
-Every derived table kept current from the base table (the CDC feed,
-the grouped view, both sides of the search index) follows one protocol:
-read its consumed-through marker, fold the base table's changes from
-that marker to the head, commit the fold together with the new marker,
-and rebuild (or bridge) when the marker's manifest has expired. Only the
-READ is shared here: after an epoch, ``run_sync`` asks every consumer
-for its marker and the columns it reads (a :class:`SpanRead`), reads the
-span most of them reduce to ONCE — projected to the union of their
-columns and persisted — and hands it to each fold. A consumer whose
-marker does not reduce to that span's start (it lags, or was just
-created) reads its own span exactly as it would alone.
+A derived table kept current from the base table (the grouped view,
+both sides of the search index) is a :class:`Fold`: read its
+consumed-through marker, skip when it is at the head, fold the base
+table's changes from it to the head and commit them with the new
+marker in one merge, and rebuild + reconcile when there is no marker
+or its manifest expired. The CDC feed shares only the read: its target
+is a directory with a JSON marker, and it bridges gaps per snapshot.
 
-"Reduces to" is ``LakeTable.effective_span``: markers that differ only
-by compaction/clustering commits diff the same snapshot pair, so the
-feed's per-snapshot diff of an epoch's merge and the view's diff from
-the previous epoch's merge across that epoch's compaction are one read.
+After an epoch, ``run_sync`` asks every consumer for its marker and the
+columns it reads (a :class:`SpanRead`), reads the span most of them
+reduce to ONCE — projected to the union of their columns and persisted
+— and hands it to each. A consumer whose marker does not reduce to that
+span's start (it lags, or was just created) reads its own span exactly
+as it would alone. "Reduces to" is ``LakeTable.effective_span``:
+markers that differ only by compaction/clustering commits diff the
+same snapshot pair.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Any, Callable
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 @dataclass(frozen=True)
@@ -99,3 +102,60 @@ def open_span(base, head: int, needs: list[tuple[int | None, SpanRead]]) -> Chan
         )
     ).persist(StorageLevel.MEMORY_AND_DISK)
     return ChangeSpan(head, best, df)
+
+
+@dataclass(frozen=True)
+class Fold:
+    """A derived LakeTable folded from the base table's changes.
+    ``marker``: the summary key holding the base snapshot consumed
+    through. ``delta(changes, head)``: changelog rows (``op`` + table
+    columns) for a span's ``read`` projection. ``full(head)``: the
+    table's whole content at base snapshot ``head``."""
+
+    table: Any
+    marker: str
+    read: SpanRead
+    delta: Callable[[DataFrame, int], DataFrame]
+    full: Callable[[int], DataFrame]
+
+    def need(self) -> tuple[int | None, SpanRead]:
+        """(consumed-through marker, SpanRead) for :func:`open_span`."""
+        return self.table.current_snapshot()["summary"].get(self.marker), self.read
+
+    def sync(self, base, span: ChangeSpan | None = None) -> dict:
+        """Advance the table to the base head (``span.head`` if given).
+        The epoch id is the head, so a re-run fold hits the epoch skip."""
+        snap = self.table.current_snapshot()
+        through = snap["summary"].get(self.marker)
+        head = span.head if span is not None else base.current_snapshot()["snapshot_id"]
+        if through is not None and head <= through:
+            return {"skipped": True, "snapshot_id": snap["snapshot_id"]}
+        changes = None
+        if through is not None:
+            try:
+                changes = self.read.changes(base, through, head, span)
+            except FileNotFoundError:  # the marker's manifest expired: rebuild
+                pass
+        rows = self._rebuild(snap, head) if changes is None else self.delta(changes, head)
+        return self.table.merge_changelog(
+            rows, epoch_id=head, summary_extra={self.marker: head}
+        )
+
+    def _rebuild(self, snap: dict, head: int) -> DataFrame:
+        """``full(head)`` as upserts, plus deletes (versioned ``head``)
+        for stored keys it lacks. Reads the whole base snapshot."""
+        key = snap["key"]
+        schema = self.table.schema(snap)
+        want = self.full(head)
+        gone = (
+            self.table.read(snap["snapshot_id"])
+            .select(*key)
+            .join(want.select(*key), key, "left_anti")
+            .select(
+                F.lit("D").alias("op"),
+                *key,
+                *[F.lit(head).cast(schema[c].dataType).alias(c)
+                  for c in snap["version_order"]],
+            )
+        )
+        return want.withColumn("op", F.lit("U")).unionByName(gone, allowMissingColumns=True)

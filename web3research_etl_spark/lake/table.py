@@ -164,11 +164,6 @@ def _footer_stats(path: str, columns: list[str]) -> dict:
     return out
 
 
-def _footer_min_max(path: str, column: str):
-    """Single-column convenience over :func:`_footer_stats`."""
-    return _footer_stats(path, [column])[column]
-
-
 # commits writing at least this many files read their footer stats via
 # a Spark job instead of a driver-side loop (see _new_entries)
 _STATS_JOB_MIN_FILES = 16
@@ -910,8 +905,7 @@ class LakeTable:
         summary_extra: dict | None = None,
         force_replace: bool = False,
         pre_write_transform=None,
-        winner_join: str | None = None,
-        write_mode: str | None = None,
+        write_mode: str = "cow",
         stage_wap_id: str | None = None,
     ) -> dict:
         """MERGE INTO: apply a changelog batch (op ∈ I/U/D).
@@ -945,16 +939,12 @@ class LakeTable:
         ``salt_partitions``: optional write-side skew spread (axis A) —
         see _write_data_files.
 
-        ``winner_join``: phase-2 retrieval strategy, see
-        operators/lww.lww_dedup_agg.
-
-        ``write_mode``: ``"cow"`` (default; env ``WEB3R_WRITE_MODE``)
-        rewrites touched buckets as above. ``"mor"`` (merge-on-read)
-        never reads stored state: the batch's OWN LWW winners (incl.
-        tombstones) are appended as per-bucket DELTA file groups
-        tagged ``seq`` = the committing snapshot id; readers resolve
-        base ⊕ deltas by ``(version_order…, seq)`` and compaction
-        folds them back (see module docstring). Per-epoch cost drops
+        ``write_mode``: ``"cow"`` (default) rewrites touched buckets as
+        above. ``"mor"`` (merge-on-read) never reads stored state: the
+        batch's OWN LWW winners (incl. tombstones) are appended as
+        per-bucket DELTA file groups tagged ``seq`` = the committing
+        snapshot id; readers resolve base ⊕ deltas by
+        ``(version_order…, seq)`` and compaction folds them back (see module docstring). Per-epoch cost drops
         from O(touched buckets) to O(batch) — the right trade when
         updates are scattered across many buckets (the 10^10-event
         web-crawl pattern: every epoch touches most buckets but a
@@ -986,8 +976,6 @@ class LakeTable:
         # reports a serial-adjusted efficiency alongside the raw one.
         t_enter = time.perf_counter()
         timings: dict[str, float] = {}
-        if write_mode is None:
-            write_mode = os.environ.get("WEB3R_WRITE_MODE", "cow")
         if write_mode not in ("cow", "mor"):
             raise ValueError(f"unknown write_mode: {write_mode!r}")
         if write_mode == "mor" and force_replace:
@@ -1072,12 +1060,8 @@ class LakeTable:
         from web3research_etl_spark.operators.lww import lww_dedup_agg
 
         non_version_cols = [c for c in data_cols if c not in set(key) | set(vorder)]
-        if winner_join is None:
-            winner_join = os.environ.get("WEB3R_WINNER_JOIN", "shuffle_hash")
         caches: list = []
-        winners = lww_dedup_agg(
-            unioned, key, vorder, winner_join=winner_join, persist_tracker=caches
-        )
+        winners = lww_dedup_agg(unioned, key, vorder, persist_tracker=caches)
         winners = (
             # delete winners become tombstones: payload nulled, version kept
             winners.withColumn(_DELETED_COL, F.col(_OP_COL) == F.lit("D"))

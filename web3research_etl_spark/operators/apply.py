@@ -45,7 +45,7 @@ def apply_changelog_batch(
     ledger: LakeTable | None = None,
     registry: DataFrame | None = None,
     salt_partitions: int | str | None = None,
-    write_mode: str | None = None,
+    write_mode: str = "cow",
 ) -> dict:
     """Apply one micro-batch exactly-once. Returns merge stats.
 

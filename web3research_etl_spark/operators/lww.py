@@ -62,17 +62,10 @@ def lww_dedup_agg(
     df: DataFrame,
     key: list[str],
     version_order: list[str],
-    winner_join: str = "shuffle_hash",
     persist_tracker: list | None = None,
     materialize_best: bool = False,
 ) -> DataFrame:
     """Two-phase LWW dedup; see module docstring.
-
-    winner_join: "shuffle_hash" (default — scales with cores, no
-    driver-side materialization; payload side hash-shuffled once, ties
-    collapsed exchange-free) or "broadcast" (zero payload shuffle, but
-    the winner set is collected to and re-sent from the driver — a
-    fixed serial cost; right when winners are known-small).
 
     persist_tracker: when a list is passed, the skinny phase-1
     aggregate is persisted (it has two consumers — the clean-winner set
@@ -129,8 +122,7 @@ def lww_dedup_agg(
     clean = best.filter(F.col(_N_COL) == 1).drop(_N_COL)
     ties = best.filter(F.col(_N_COL) > 1).drop(_N_COL)
 
-    clean = F.broadcast(clean) if winner_join == "broadcast" else clean.hint("SHUFFLE_HASH")
-    out = df.join(clean, join_cols, "left_semi")
+    out = df.join(clean.hint("SHUFFLE_HASH"), join_cols, "left_semi")
     # Tie path: re-delivered (key, version) pairs — a bounded sliver of
     # any batch, so broadcast is safe; the payload dropDuplicates (a
     # SortAggregate over binary) runs on only these rows.

@@ -196,9 +196,8 @@ def heal(
     # force_replace: the changelog is the source of truth even when the
     # stored version is numerically newer (reorg semantics). Healing is
     # CoW by contract — force_replace must rewrite the stored losers, a
-    # read-free MoR delta can't — so write_mode is pinned here rather
-    # than inherited from WEB3R_WRITE_MODE (a MoR deployment would
-    # otherwise turn every heal into a ValueError).
+    # read-free MoR delta can't — so write_mode is pinned here, whatever
+    # mode the table's ingest merges use.
     return table.merge_changelog(
         fixes, epoch_id=epoch_id, force_replace=True, write_mode="cow"
     )

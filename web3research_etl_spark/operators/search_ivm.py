@@ -23,15 +23,14 @@ Fold semantics per span (before-images do the work):
   anti-join on the span's changed docs only — never against the
   standing index).
 
-Each index table carries its own consumed-through marker
-(``index_through`` in its commit summary) so the fold and its
-bookkeeping commit atomically per table; a crash between the two
-tables' folds just leaves one of them a wider (telescoping, still
-exact) span to catch up on the next call. A broken incremental chain
-(snapshot expiry removed the from-manifest, or a delete whose
-before-image was vacuumed) self-heals with one full rebuild +
-reconcile — the same recovery contract as the IVM view and the CDC
-feed.
+Each index table is a ``lake/change_span.Fold`` with its own
+consumed-through marker (``index_through`` in its commit summary), so
+the fold and its bookkeeping commit atomically per table; a crash
+between the two tables' folds just leaves one of them a wider
+(telescoping, still exact) span to catch up on the next call. A broken
+incremental chain (snapshot expiry removed the from-manifest) self-heals
+with one full rebuild + reconcile — the same protocol the IVM view
+runs.
 
 LWW versioning: every fold stamps its rows with ``ver`` = the base
 snapshot id folded through. Spans are strictly increasing, so replaying
@@ -50,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from web3research_etl_spark.lake.change_span import ChangeSpan, SpanRead
+from web3research_etl_spark.lake.change_span import ChangeSpan, Fold, SpanRead
 from web3research_etl_spark.lake.table import LakeTable
 from web3research_etl_spark.operators.search import doc_lengths, doc_tokens, indexed_postings
 
@@ -126,63 +125,49 @@ def sync_search_index(
     cadence; spans telescope). Returns per-table fold results. A shared
     ``span`` (``lake/change_span``) pins both folds to ``span.head`` and
     is read by each side whose marker reduces to its start."""
-    return {
-        "postings": _sync_one(index, base, text_col, True, span),
-        "lengths": _sync_one(index, base, text_col, False, span),
-    }
+    postings, lengths = index_folds(index, base, text_col)
+    return {"postings": postings.sync(base, span), "lengths": lengths.sync(base, span)}
 
 
-def _span_read(id_col: str, text_col: str) -> SpanRead:
-    """The index's inputs from a change span: the key and both images'
-    text."""
-    names = [id_col, "change_type", text_col, f"old_{text_col}"]
-    return SpanRead({n: F.col(n) for n in names}, payload=True, before=True)
+def index_folds(index: dict, base: LakeTable, text_col: str = "text") -> list[Fold]:
+    """The postings and lengths tables as two Folds over one
+    span read (the key and both images' text). Their rebuild reads the
+    base snapshot at the fold's head — at scale the whole corpus, so
+    only a fresh index or a broken chain takes it."""
+    id_col = index["id_name"]
+    read = SpanRead(
+        {n: F.col(n) for n in [id_col, "change_type", text_col, f"old_{text_col}"]},
+        payload=True,
+        before=True,
+    )
 
+    def docs(head: int) -> DataFrame:
+        return base.read(head).select(id_col, text_col)
 
-def index_span_needs(index: dict, text_col: str = "text") -> list[tuple]:
-    """(index_through marker, SpanRead) of both index tables, for
-    ``change_span.open_span``."""
-    read = _span_read(index["id_name"], text_col)
     return [
-        (index[side].current_snapshot()["summary"].get(_THROUGH), read)
-        for side in ("postings", "lengths")
+        Fold(
+            index["postings"], _THROUGH, read,
+            lambda chg, head: _postings_delta(chg, text_col, id_col, head),
+            lambda head: _with_ver(
+                indexed_postings(docs(head), text_col=text_col, id_col=id_col), head
+            ),
+        ),
+        Fold(
+            index["lengths"], _THROUGH, read,
+            lambda chg, head: _lengths_delta(chg, text_col, id_col, head),
+            lambda head: _with_ver(
+                doc_lengths(docs(head), text_col=text_col, id_col=id_col), head
+            ),
+        ),
     ]
 
 
-def _sync_one(
-    index: dict,
-    base: LakeTable,
-    text_col: str,
-    postings_side: bool,
-    span: ChangeSpan | None,
-) -> dict:
-    tbl: LakeTable = index["postings"] if postings_side else index["lengths"]
-    id_col = index["id_name"]
-    snap = tbl.current_snapshot()
-    through = snap["summary"].get(_THROUGH)
-    cur = span.head if span is not None else base.current_snapshot()["snapshot_id"]
-    if through is not None and cur <= through:
-        return {"skipped": True, "snapshot_id": snap["snapshot_id"]}
-    if through is None:
-        return _rebuild_one(tbl, base, text_col, id_col, cur, postings_side)
-    try:
-        chg = _span_read(id_col, text_col).changes(base, through, cur, span)
-    except FileNotFoundError:
-        return _rebuild_one(tbl, base, text_col, id_col, cur, postings_side)
-    rows = (
-        _postings_delta(chg, text_col, id_col, cur)
-        if postings_side
-        else _lengths_delta(chg, text_col, id_col, cur)
-    )
-    return tbl.merge_changelog(
-        rows, epoch_id=cur, summary_extra={_THROUGH: cur}
-    )
+def _with_ver(df: DataFrame, ver: int) -> DataFrame:
+    return df.withColumn("ver", F.lit(ver).cast("long"))
 
 
 def _with_op_ver(df: DataFrame, op: str, ver: int) -> DataFrame:
-    return df.withColumn("op", F.lit(op)).withColumn(
-        "ver", F.lit(ver).cast("long")
-    )
+    return _with_ver(df.withColumn("op", F.lit(op)), ver)
 
 
 def _postings_delta(
@@ -231,41 +216,6 @@ def _lengths_delta(
     )
     return _with_op_ver(ups, "U", ver).unionByName(
         _with_op_ver(dels, "D", ver)
-    )
-
-
-def _rebuild_one(
-    tbl: LakeTable,
-    base: LakeTable,
-    text_col: str,
-    id_col: str,
-    cur: int,
-    postings_side: bool,
-) -> dict:
-    """Full (re)materialization + reconcile: one base scan, stale index
-    rows (docs that vanished while the chain was broken) tombstoned via
-    anti-join. Bootstraps an empty index and heals a broken chain —
-    NOT the steady-state path (at scale it reads the whole corpus)."""
-    docs = base.read().select(id_col, text_col)
-    if postings_side:
-        want = indexed_postings(docs, text_col=text_col, id_col=id_col)
-        have = tbl.read().select("token", id_col)
-        gone = have.join(
-            want.select("token", id_col), ["token", id_col], "left_anti"
-        ).withColumn("tf", F.lit(None).cast("long")).withColumn(
-            "dl", F.lit(None).cast("long")
-        )
-    else:
-        want = doc_lengths(docs, text_col=text_col, id_col=id_col)
-        have = tbl.read().select(id_col)
-        gone = have.join(
-            want.select(id_col), id_col, "left_anti"
-        ).withColumn("dl", F.lit(None).cast("long"))
-    rows = _with_op_ver(want, "U", cur).unionByName(
-        _with_op_ver(gone, "D", cur)
-    )
-    return tbl.merge_changelog(
-        rows, epoch_id=cur, summary_extra={_THROUGH: cur}
     )
 
 

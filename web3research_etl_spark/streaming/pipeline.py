@@ -112,7 +112,7 @@ def run_sync(
     maintain_expire_feed: bool = False,
     maintain_cluster_by: list[str] | None = None,
     maintain_cluster_files: int = 8,
-    write_mode: str | None = None,
+    write_mode: str = "cow",
     sidecar_async: bool = False,
     search_index: dict | None = None,
     search_text_col: str = "text",
@@ -210,16 +210,16 @@ def run_sync(
     ``search_text_col`` names the tokenized column (default ``text``).
 
     One change span per pass: the feed, the view and both index tables
-    each keep their own consumed-through marker, but after an epoch the
-    sidecar pass reads the base table's change span ONCE — the span
-    most markers reduce to, projected to the columns those consumers
-    read and persisted — hands it to every fold, and unpersists it when
-    the pass ends (``lake/change_span``). A consumer whose marker does
-    not reduce to that span's start reads its own span as it would
-    alone. Markers reduce across compaction and clustering commits,
-    which ``read_changes`` and the feed skip from manifest metadata:
-    they rewrite the resolved rows unchanged, so the previous epoch's
-    maintenance adds no read to this epoch's span.
+    each keep their own consumed-through marker (the view and the index
+    fold through one ``lake/change_span.Fold`` protocol; the feed
+    publishes per snapshot), but the sidecar pass reads the base
+    table's change span ONCE — the span most markers reduce to,
+    projected to the columns those consumers read and persisted — hands
+    it to every consumer, and unpersists it when the pass ends. A
+    consumer whose marker does not reduce to that span's start reads
+    its own span. Markers reduce across compaction and clustering
+    commits, which ``read_changes`` and the feed skip from manifest
+    metadata, so the previous epoch's maintenance adds no read.
 
     ``sidecar_async=True`` moves the feed publish + view fold OFF the
     epoch critical path: they run in a background thread that OVERLAPS
@@ -271,9 +271,10 @@ def run_sync(
             if feed_dir is not None:
                 needs.append(cdc_feed.feed_span_need(table, feed_dir, payloads=feed_payloads))
             if view is not None:
-                needs.append(ivm.view_span_need(view, view_group, view_value))
+                needs.append(ivm.view_fold(view, table, view_group, view_value).need())
             if search_index is not None:
-                needs += search_ivm.index_span_needs(search_index, text_col=search_text_col)
+                folds = search_ivm.index_folds(search_index, table, search_text_col)
+                needs += [f.need() for f in folds]
             if needs:
                 span = open_span(table, table.current_snapshot()["snapshot_id"], needs)
             if feed_dir is not None:
