@@ -110,17 +110,8 @@ PROBE_MAX = float(os.environ.get("BENCH_PROBE_MAX", "1.02"))
 QUERY_REPEATS = int(os.environ.get("BENCH_QUERY_REPEATS", "3"))
 # CoW-vs-MoR write-amplification comparison (one extra pair of runs)
 MOR_COMPARE = os.environ.get("BENCH_MOR", "1") == "1"
-# AQE advisory partition size override for the CDC legs (e.g. "6m").
-# Session default is 16m (sized for the payload/pandas-UDF stages); at
-# the sandbox's tiny per-epoch batches 16m coalesces payload stages to
-# ~1-2 task waves on the 8-wide leg, so one straggler task costs a
-# whole wave (+25-100% on that epoch) — a quantization term the
-# 10^10-event target doesn't have (partitions ≫ cores there). Applied
-# identically to BOTH legs of a pair, so the work decomposition stays
-# level-independent. Empty = session default.
-LEG_ADVISORY = os.environ.get("BENCH_LEG_ADVISORY", "")
-# shuffle-partition override for the CDC legs (same both legs)
-LEG_SHUFFLE = int(os.environ.get("BENCH_LEG_SHUFFLE", "32"))
+# shuffle partitions of the CDC legs (same both legs)
+LEG_SHUFFLE = 32
 
 BENCH_QUERIES = [
     "cdc_lww_converged",
@@ -424,8 +415,6 @@ def bench_cdc(
         "spark.sql.files.maxPartitionBytes": "2m",
         "spark.sql.files.openCostInBytes": "256k",
     }
-    if LEG_ADVISORY:
-        leg_conf["spark.sql.adaptive.advisoryPartitionSizeInBytes"] = LEG_ADVISORY
     spark = get_spark(
         app_name=f"bench-cdc-{cpus}",
         master=f"local[{cpus}]",
@@ -489,14 +478,15 @@ def bench_cdc(
     rows = table.read().count()
     n_epochs = len(table.committed_epochs())
     # per-epoch driver-serial breakdown (merge_timings persisted in each
-    # merge commit's summary — VERDICT r4 next #2): probe/plan/stats are
+    # merge commit's record — VERDICT r4 next #2): probe/plan/stats are
     # the sections that do NOT scale with cores; their sum per epoch is
-    # the measured Amdahl term the N-vs-4N rule pays
+    # the measured Amdahl term the N-vs-4N rule pays. Staged manifests
+    # are skipped: a published stage's record carries the same timings.
     serial_detail = []
     for sid in sorted(table.snapshot_ids()):
         s = table.snapshot(sid)
-        if s.get("operation") in ("merge", "merge-delta"):
-            mt = s["summary"].get("merge_timings")
+        if "staged" not in s and s["operation"] in ("merge", "merge-delta"):
+            mt = s["commit"].get("merge_timings")
             if mt:
                 serial_detail.append(mt)
     epoch_serial_ms = [

@@ -159,7 +159,7 @@ def test_range_scan_skips_and_is_exact(spark, tmp_table_dir):
 def test_merge_records_driver_serial_timings(spark, tmp_table_dir):
     """Every merge commit persists its driver-serial breakdown
     (merge_timings: probe/plan/write/stats ms + files written) in the
-    snapshot summary — the per-epoch Amdahl term bench.py reads back
+    snapshot's commit record — the per-epoch Amdahl term bench.py reads back
     for the serial-adjusted scaling efficiency (VERDICT r4 next #2).
     Pinned so the instrumentation cannot silently vanish."""
     import pyspark.sql.functions as F
@@ -170,12 +170,12 @@ def test_merge_records_driver_serial_timings(spark, tmp_table_dir):
     ).withColumn("op", F.lit("U"))
     t.merge_changelog(batch, epoch_id=1)
     snap = t.current_snapshot()
-    mt = snap["summary"].get("merge_timings")
+    mt = snap["commit"].get("merge_timings")
     assert mt is not None
     for k in ("probe_ms", "plan_ms", "write_ms", "stats_ms", "files"):
         assert k in mt and mt[k] >= 0
     # MoR path records them too (no probe — read-free delta append)
     t2 = _create(spark, f"{tmp_table_dir}/t2", n_buckets=2)
     t2.merge_changelog(batch, epoch_id=1, write_mode="mor")
-    mt2 = t2.current_snapshot()["summary"].get("merge_timings")
+    mt2 = t2.current_snapshot()["commit"].get("merge_timings")
     assert mt2 is not None and "probe_ms" not in mt2 and mt2["files"] >= 1

@@ -293,3 +293,27 @@ def test_evolution_out_of_order_epochs(spark, tmp_table_dir, changelog_path):
     cols = [c for c, _ in t.read().dtypes]
     assert cols.count("http_status") == 1 and "fetch_status" not in cols
     assert t.read().count() > 0
+
+
+def test_registry_resolved_once_per_batch(spark, tmp_table_dir, changelog_path, monkeypatch):
+    """One registry collect per batch: apply_changelog_batch hands the
+    same change list to the ALTER and to the payload parse (each collect
+    of the registry DataFrame is a Spark job)."""
+    import web3research_etl_spark.operators.apply as apply_mod
+    import web3research_etl_spark.registry as registry_mod
+
+    real, calls = registry_mod.registry_changes, []
+
+    def counting(registry, up_to_version):
+        calls.append(up_to_version)
+        return real(registry, up_to_version)
+
+    monkeypatch.setattr(apply_mod, "registry_changes", counting)
+    monkeypatch.setattr(registry_mod, "registry_changes", counting)
+    ch = spark.read.parquet(changelog_path)
+    t = _new_table(spark, tmp_table_dir, "reg_once")
+    batch = ch.filter((F.col("payload_version") == 3) & (F.col("event_seq") % 10 == 0))
+    apply_changelog_batch(t, batch, epoch_id=0, registry=default_registry(spark))
+    assert calls == [3]
+    cols = t.schema().fieldNames()
+    assert "http_status" in cols and "fetch_status" not in cols

@@ -351,3 +351,70 @@ def test_rollback_search_index_self_heals(spark, tmp_table_dir):
         for r in indexed_postings(base.read().select("doc_id", "text")).collect()
     )
     assert got == want and got
+
+
+def test_commit_record_describes_only_its_own_commit(spark, tmp_table_dir):
+    """``summary`` is cumulative state; ``commit`` is one commit's record
+    and is never carried into a child: a compaction holds no earlier
+    merge's timings, rollback or publish provenance."""
+    t = _table(spark, tmp_table_dir)
+    _apply(t, spark, [1])
+    s1 = t.current_snapshot()["snapshot_id"]
+    t.merge_changelog(_batch(spark, EPOCHS[2]), epoch_id=2, write_mode="mor")
+    s2 = t.current_snapshot()["snapshot_id"]
+    t.rollback_to(s1)
+    _apply(t, spark, [3])
+    staged_id = t.merge_changelog(
+        _batch(spark, EPOCHS[4]), stage_wap_id="w", write_mode="mor"
+    )["snapshot_id"]
+    t.publish_staged("w")
+    assert t.rewrite_small_files()["skipped"] is False
+
+    snaps = [t.snapshot(i) for i in t.snapshot_ids()]
+    published = [s for s in snaps if "staged" not in s]
+    assert [s["operation"] for s in published] == [
+        "create", "merge", "merge-delta", "rollback", "merge", "merge-delta", "compact",
+    ]
+    assert [t.added_epochs(s) for s in published] == [[], [1], [2], [], [3], [], []]
+    rollback, publish = published[3], published[5]
+    assert rollback["commit"] == {
+        "epochs": [], "rolled_back_to": s1, "rolled_back_from": s2,
+    }
+    assert publish["commit"]["published_from_wap"] == {
+        "wap_id": "w", "staged_snapshot_id": staged_id,
+    }
+    for s in snaps:
+        rec = s["commit"]
+        assert ("merge_timings" in rec) == s["operation"].startswith("merge")
+        assert ("published_from_wap" in rec) == (s is publish)
+        assert ("rolled_back_to" in rec) == (s is rollback)
+        assert set(s["summary"]) == {"committed_epochs"}
+    assert published[-1]["summary"]["committed_epochs"] == [1, 3]
+
+
+def test_published_epochless_wap_is_no_longer_listed_and_retries_clean(
+    spark, tmp_table_dir
+):
+    t = _table(spark, tmp_table_dir)
+    _apply(t, spark, [1, 2])
+    t.merge_changelog(_batch(spark, EPOCHS[3]), stage_wap_id="w")
+    assert t.publish_staged("w")["already_published"] is False
+    assert t.staged_snapshots() == []
+    head = t.current_snapshot()["snapshot_id"]
+    assert t.publish_staged("w") == {"already_published": True, "snapshot_id": head}
+    assert t.current_snapshot()["snapshot_id"] == head
+
+
+def test_expiry_retains_published_history_past_pending_stages(spark, tmp_table_dir):
+    """retain_last counts published snapshots only; a pending stage is
+    kept while the snapshot it was staged on is kept."""
+    t = _table(spark, tmp_table_dir)
+    _apply(t, spark, [1, 2])
+    t.merge_changelog(_batch(spark, EPOCHS[3]), epoch_id=3, stage_wap_id="a")
+    t.merge_changelog(_batch(spark, EPOCHS[4]), epoch_id=4, stage_wap_id="b")
+    t.expire_snapshots(retain_last=2)
+    kept = [t.snapshot(i) for i in t.snapshot_ids()]
+    assert len([s for s in kept if "staged" not in s]) == 2
+    assert [s["wap_id"] for s in t.staged_snapshots()] == ["a", "b"]
+    assert t.publish_staged("a")["already_published"] is False
+    assert 3 in t.committed_epochs()

@@ -121,10 +121,10 @@ def _feed_fields(table, snap: dict, payloads: bool) -> tuple[list, list, list]:
     )
 
 
-def _epoch_of(table, snap: dict) -> Any:
-    """The epoch marker this snapshot committed, if any (a commit adds
-    at most one)."""
-    added = table.added_epochs(snap)
+def _epoch_of(snap: dict) -> Any:
+    """The epoch marker this snapshot committed, if any, from its commit
+    record (a commit adds at most one)."""
+    added = snap["commit"]["epochs"]
     return added[-1] if added else None
 
 
@@ -249,7 +249,7 @@ def publish_changes(
             continue
         try:
             chg = _span_read(table, snap, payloads).changes(table, parent, sid, span)
-            epoch = _epoch_of(table, snap)
+            epoch = _epoch_of(snap)
         except FileNotFoundError:
             # parent manifest expired (maintain --expire-keep) — the diff
             # is unrecoverable; bridge with this snapshot's full state

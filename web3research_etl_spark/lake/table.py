@@ -17,6 +17,14 @@ design is 1:1 with Iceberg's model so a real catalog slots in):
   re-delivery: an already-committed epoch is skipped, upgrading the
   reference's at-least-once + ReplacingMergeTree convergence
   (/root/reference/src/ch_eth/init.rs:402-448) to exactly-once state.
+- **two metadata maps per manifest**: ``summary`` is CUMULATIVE table
+  state, carried into every child — ``committed_epochs`` and consumer
+  markers such as ``view_through``/``index_through``. ``commit`` is the
+  record of that one commit, never copied forward — the ``epochs`` it
+  added, ``merge_timings``, rollback provenance
+  (``rolled_back_to``/``rolled_back_from``), WAP provenance
+  (``published_from_wap``), ``cluster_by``. Every manifest after
+  ``create`` is written by one OCC loop, ``_commit_data``.
 - **bucketed copy-on-write MERGE**: data files are hash-bucketed by key
   (``pmod(xxhash64(key), n_buckets)``, Iceberg ``bucket(N, url)``); a
   merge rewrites ONLY the buckets touched by the batch — at 100 TB a
@@ -192,13 +200,36 @@ def _bloom_may_contain(bits: bytes, m: int, k: int, h: int) -> bool:
     return True
 
 
-def _atomic_write_json(path: str, obj: dict) -> None:
+def _paths_by_bucket(snap: dict) -> dict[int, tuple]:
+    """{bucket: sorted paths of ALL its file groups}. A bucket may hold
+    several groups (appends, MoR delta generations), so a change
+    detector must compare their union, not whichever group the manifest
+    lists last. Equal tuples in two snapshots mean the bucket's rows are
+    identical in both."""
+    out: dict[int, list[str]] = {}
+    for fg in snap["file_groups"]:
+        out.setdefault(fg["bucket"], []).extend(fg["paths"])
+    return {b: tuple(sorted(ps)) for b, ps in out.items()}
+
+
+def _referenced_paths(snaps) -> set[str]:
+    """Every data file path the given manifests list."""
+    return {p for snap in snaps for fg in snap["file_groups"] for p in fg["paths"]}
+
+
+def _write_json_tmp(path: str, obj: dict) -> str:
+    """Write ``obj`` fully (fsynced) to a fresh temp name beside
+    ``path`` and return that name."""
     tmp = f"{path}.tmp.{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         json.dump(obj, f, indent=1, sort_keys=True)
         f.flush()
         os.fsync(f.fileno())
-    os.replace(tmp, path)  # atomic on POSIX
+    return tmp
+
+
+def _atomic_write_json(path: str, obj: dict) -> None:
+    os.replace(_write_json_tmp(path, obj), path)  # atomic on POSIX
 
 
 class CommitConflictError(RuntimeError):
@@ -268,6 +299,7 @@ class LakeTable:
             "schemas": {"0": fields},
             "file_groups": [],
             "summary": {"committed_epochs": []},
+            "commit": {"epochs": []},
         }
         t._commit(snap)
         return t
@@ -329,11 +361,7 @@ class LakeTable:
         atomic-swap-on-metadata-pointer, expressed on a POSIX dir).
         Readers never observe a partial manifest."""
         path = self._snap_path(snap["snapshot_id"])
-        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(snap, f, indent=1, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
+        tmp = _write_json_tmp(path, snap)
         try:
             os.link(tmp, path)
         except FileExistsError:
@@ -358,13 +386,10 @@ class LakeTable:
         return set(snap["summary"].get("committed_epochs", []))
 
     def added_epochs(self, snap: dict) -> list:
-        """The epoch markers ``snap`` itself committed: its cumulative
-        ``committed_epochs`` minus its parent's. A snapshot whose
-        cumulative list only restates history (an epoch-less merge, a
-        compaction, a rollback) added none."""
-        parent = snap.get("parent")
-        before = self.committed_epochs(self.snapshot(parent)) if parent is not None else set()
-        return [e for e in snap["summary"].get("committed_epochs", []) if e not in before]
+        """The epoch markers ``snap`` itself committed, from its
+        per-commit record. An epoch-less merge, a compaction, a rollback
+        or an alter added none; a WAP publish added the staged merge's."""
+        return snap["commit"]["epochs"]
 
     def synthetic_epoch_id(self, kind: str = "heal") -> int:
         """Integer epoch for out-of-band applies (heal, replay-tail).
@@ -438,20 +463,16 @@ class LakeTable:
             ch["renamed_from"]: ch["name"] for ch in changes if ch["change"] == "rename"
         }
         new_schema_id = max(int(k) for k in snap["schemas"]) + 1
-        new = dict(snap)
-        new["key"] = [renames.get(c, c) for c in snap["key"]]
-        new["version_order"] = [renames.get(c, c) for c in snap["version_order"]]
-        # claim above ALL ids (a staged WAP snapshot may hold a higher
-        # id than the published head this alter builds on)
-        new["snapshot_id"] = self.snapshot_ids()[-1] + 1
-        new["parent"] = snap["snapshot_id"]
-        new["operation"] = "alter"
-        new["current_schema_id"] = new_schema_id
-        new["next_field_id"] = next_id
-        new["schemas"] = {**snap["schemas"], str(new_schema_id): fields}
-        new["summary"] = dict(snap["summary"])
-        self._commit(new)
-        return new["snapshot_id"]
+        res = self._commit_data(
+            snap,
+            "alter",
+            key=[renames.get(c, c) for c in snap["key"]],
+            version_order=[renames.get(c, c) for c in snap["version_order"]],
+            current_schema_id=new_schema_id,
+            next_field_id=next_id,
+            schemas={**snap["schemas"], str(new_schema_id): fields},
+        )
+        return res["snapshot_id"]
 
     # ---------------------------------------------------------------- read
     def _bucket_expr(self, snap: dict) -> F.Column:
@@ -541,16 +562,6 @@ class LakeTable:
         if not key or not vorder:
             raise ValueError("read_changes requires key + version_order")
         span = self._effective_span(snap_a, snap_b)
-
-        def _paths_by_bucket(snap: dict) -> dict[int, tuple]:
-            # a bucket may hold several file groups (appends, MoR delta
-            # generations) — the change detector must see their UNION,
-            # not whichever group the manifest lists last
-            out: dict[int, list[str]] = {}
-            for fg in snap["file_groups"]:
-                out.setdefault(fg["bucket"], []).extend(fg["paths"])
-            return {b: tuple(sorted(ps)) for b, ps in out.items()}
-
         changed: set[int] = set()
         if span is not None:
             old_snap, new_snap = span
@@ -892,8 +903,8 @@ class LakeTable:
         # appends never replace file groups → touched=∅: always
         # rebaseable onto any concurrent commit
         res = self._commit_data(
-            snap, new_id, "append", new_groups, epoch_id, summary_extra,
-            touched=set(), new_entries=new_entries,
+            snap, "append", new_groups, [] if epoch_id is None else [epoch_id],
+            summary_extra, touched=set(), new_entries=new_entries,
         )
         return res["snapshot_id"]
 
@@ -970,7 +981,7 @@ class LakeTable:
         # the sections below that do NOT scale with executor count —
         # the touched-bucket probe's job barrier, the footer-stats read,
         # and Python-side plan construction — are timed and persisted in
-        # the commit summary (`merge_timings`), so the Amdahl term the
+        # the commit record (`merge_timings`), so the Amdahl term the
         # N-vs-4N scaling rule pays is a measured number per epoch, not
         # an inference. bench.py reads them back from the snapshots and
         # reports a serial-adjusted efficiency alongside the raw one.
@@ -1102,27 +1113,24 @@ class LakeTable:
         new_entries = self._new_entries(by_bucket, snap)
         timings["stats_ms"] = round((time.perf_counter() - t0) * 1000, 1)
         timings["files"] = sum(len(ps) for ps in by_bucket.values())
-        summary_extra = {**(summary_extra or {}), "merge_timings": timings}
         if write_mode == "mor":
             if not new_entries:
                 return {"skipped": True, "snapshot_id": snap["snapshot_id"], "epoch_id": epoch_id}
             for e in new_entries:
-                e["delta"] = True
-                e["seq"] = new_id
+                e["delta"] = True  # seq is stamped with the id claimed
             touched = sorted(by_bucket)
-            new_groups = list(snap["file_groups"]) + new_entries
             # touched=∅: a delta commit replaces nothing, so OCC rebase
-            # always succeeds (seq is refreshed to the rebased id)
-            res = self._commit_data(
-                snap, new_id, "merge-delta", new_groups, epoch_id, summary_extra,
-                touched=set(), new_entries=new_entries, staged_wap=stage_wap_id,
+            # always succeeds
+            operation, new_groups, touched_set = (
+                "merge-delta", list(snap["file_groups"]) + new_entries, set()
             )
         else:
-            new_groups = keep_groups + new_entries
-            res = self._commit_data(
-                snap, new_id, "merge", new_groups, epoch_id, summary_extra,
-                touched=touched_set, new_entries=new_entries, staged_wap=stage_wap_id,
-            )
+            operation, new_groups = "merge", keep_groups + new_entries
+        res = self._commit_data(
+            snap, operation, new_groups, [] if epoch_id is None else [epoch_id],
+            summary_extra, record={"merge_timings": timings}, touched=touched_set,
+            new_entries=new_entries, staged_wap=stage_wap_id,
+        )
         if res.get("already_committed"):
             # a concurrent retry of the SAME epoch won the commit race —
             # the idempotent-skip outcome, just discovered at commit time
@@ -1271,56 +1279,74 @@ class LakeTable:
 
     def _commit_data(
         self,
-        snap: dict,
-        new_id: int,
+        base: dict,
         operation: str,
-        file_groups: list[dict],
-        epoch_id: Any,
-        summary_extra: dict | None,
+        file_groups: list[dict] | None = None,
+        epochs: list = (),
+        summary_extra: dict | None = None,
+        record: dict | None = None,
         touched: set[int] | None = None,
         new_entries: list[dict] | None = None,
         staged_wap: str | None = None,
+        **fields: Any,
     ) -> dict:
-        """Commit a data snapshot on top of ``snap`` with optimistic
-        concurrency (Iceberg's commit loop). If another writer claimed
-        the id first, the commit REBASES onto the new current snapshot
-        when it can prove linearizability from metadata alone:
+        """Commit a snapshot on top of ``base`` with optimistic
+        concurrency (Iceberg's commit loop) — the ONE path every manifest
+        after ``create`` is claimed through. The new manifest is ``base``
+        with ``fields`` (schema or bucket spec, a rollback's or publish's
+        ``summary``) and ``file_groups`` replaced, and:
 
-        - ``touched``/``new_entries`` given (merge/append): every
-          touched bucket's file-group list must be IDENTICAL in the base
-          and the latest snapshot — then the two commits wrote disjoint
-          buckets and this one re-parents as latest ⊖ touched ⊕
-          new_entries. Appends pass ``touched=∅`` (never replace
-          groups): always rebaseable.
-        - the racing commit changed schema/key/bucket spec, or overlaps
-          a touched bucket, or this is a full-rewrite op (compact,
-          vacuum, rebucket — ``touched=None``): raise
-          ``CommitConflictError``; the caller re-runs against fresh
-          state. Data files already written stay orphaned until
-          ``remove_orphan_files`` (same as any crashed write).
-        - a racer already committed OUR epoch marker (crash-retry race
-          of the same micro-batch): return ``{"already_committed":
-          True}`` — the idempotent-skip outcome.
+        - ``summary``: cumulative state, carried forward — its
+          ``committed_epochs`` gains ``epochs``, ``summary_extra`` (the
+          consumer markers) is merged in;
+        - ``commit``: this commit's own record, never carried forward —
+          ``{"epochs": epochs, **record}``.
 
-        Returns {"snapshot_id": committed id} on success.
+        If another writer claimed the id first:
+
+        - only STAGED claims took it (the published head is still
+          ``base``): the commit stands and re-claims above them;
+        - a racer already committed ALL of ``epochs`` (crash-retry race
+          of the same micro-batch, or of a publish): return
+          ``{"already_committed": True}`` — the idempotent-skip outcome;
+        - ``touched``/``new_entries`` given (merge/append) and the
+          published head moved: every touched bucket's file groups must
+          be IDENTICAL in ``base`` and the new head — then the two
+          commits wrote disjoint buckets and this one re-parents as
+          head ⊖ touched ⊕ new_entries. Appends and MoR deltas pass
+          ``touched=∅`` (they replace no groups): always rebaseable;
+        - otherwise (the racer changed schema/key/bucket spec or a
+          touched bucket, or this is a full-rewrite, alter, rollback or
+          publish — ``touched=None``): raise ``CommitConflictError``;
+          the caller re-runs against fresh state. Data files already
+          written stay orphaned until ``remove_orphan_files``.
+
+        Delta entries' ``seq`` is stamped with the id actually claimed
+        (the read-side LWW tie-break orders generations by it). Returns
+        ``{"snapshot_id": committed id}`` on success.
         """
-        base = snap
+        new_id = base["snapshot_id"] + 1
         while True:
-            summary = dict(base["summary"])
-            epochs = list(summary.get("committed_epochs", []))
-            if epoch_id is not None:
-                epochs.append(epoch_id)
-            summary["committed_epochs"] = epochs
-            if summary_extra:
-                summary.update(summary_extra)
-            new = dict(base)
-            new["snapshot_id"] = new_id
-            new["parent"] = base["snapshot_id"]
-            new["operation"] = operation
-            new["file_groups"] = file_groups
-            new["summary"] = summary
+            new = {**base, **fields}
+            summary = dict(new["summary"])
+            prior = summary.get("committed_epochs", [])
+            seen = set(prior)
+            summary["committed_epochs"] = prior + [e for e in epochs if e not in seen]
+            summary.update(summary_extra or {})
+            new.update(
+                snapshot_id=new_id,
+                parent=base["snapshot_id"],
+                operation=operation,
+                summary=summary,
+                commit={"epochs": list(epochs), **(record or {})},
+            )
+            if file_groups is not None:
+                new["file_groups"] = file_groups
             if staged_wap is not None:
                 new["staged"] = {"wap_id": staged_wap}
+            for e in new_entries or []:
+                if e.get("delta"):
+                    e["seq"] = new_id
             try:
                 self._commit(new)
                 return {"snapshot_id": new_id}
@@ -1331,9 +1357,7 @@ class LakeTable:
                     # re-listing resolves it next iteration
                     raise
                 latest = self.current_snapshot()
-                if epoch_id is not None and epoch_id in set(
-                    latest["summary"].get("committed_epochs", [])
-                ):
+                if epochs and set(epochs) <= self.committed_epochs(latest):
                     return {
                         "already_committed": True,
                         "snapshot_id": latest["snapshot_id"],
@@ -1350,15 +1374,6 @@ class LakeTable:
                         raise CommitConflictError(
                             "concurrent schema/spec change; re-run the operation"
                         ) from None
-
-                    def _paths_by_bucket(s: dict) -> dict[int, tuple]:
-                        out: dict[int, list] = {}
-                        for fg in s["file_groups"]:
-                            out.setdefault(fg["bucket"], []).append(
-                                (fg["schema_id"], tuple(sorted(fg["paths"])))
-                            )
-                        return {b: tuple(sorted(v)) for b, v in out.items()}
-
                     pb, pl = _paths_by_bucket(base), _paths_by_bucket(latest)
                     overlap = [b for b in touched if pb.get(b) != pl.get(b)]
                     if overlap:
@@ -1370,15 +1385,7 @@ class LakeTable:
                         fg for fg in latest["file_groups"] if fg["bucket"] not in touched
                     ] + new_entries
                     base = latest
-                # else: only STAGED claims took our id — the published
-                # state is unchanged, so the commit content stands and
-                # just re-claims above the staged ids
                 new_id = top + 1
-                # delta seq must equal the id actually committed — the
-                # read-side LWW tie-break orders generations by it
-                for e in new_entries or []:
-                    if e.get("delta"):
-                        e["seq"] = new_id
 
     # ------------------------------------------------------------- utility
     def read_for_keys(self, keys: list, include_deleted: bool = False) -> DataFrame:
@@ -1528,43 +1535,13 @@ class LakeTable:
         keys arrive in fresh files) a narrow range reads a handful of
         files, not the table. The residual filter pushes down into the
         pruned parquet scan. Conservative: files without stats always
-        scan."""
-        snap = self.current_snapshot()
-        key_cols = snap["key"]
+        scan. The leading-key case of ``read_for_column_range``."""
+        key_cols = self.current_snapshot()["key"]
         if not key_cols:
             raise ValueError("read_for_key_range requires a keyed table")
-
-        def _overlaps(mm) -> bool:
-            lo, hi = mm
-            try:
-                if lower is not None and hi < lower:
-                    return False
-                if upper is not None and lo > upper:
-                    return False
-            except TypeError:
-                return True
-            return True
-
-        groups = []
-        for fg in snap["file_groups"]:
-            stats = fg.get("stats") or {}
-            keep = [
-                p for p in fg["paths"]
-                if (mm := stats.get(p)) is None or _overlaps(mm)
-            ]
-            if keep:
-                g = dict(fg)
-                g["paths"] = keep
-                groups.append(g)
-        df = self._read_groups(snap, groups, include_deleted=include_deleted)
-        if df is None:
-            return self.spark.createDataFrame([], self.schema(snap))
-        lead = F.col(key_cols[0])
-        if lower is not None:
-            df = df.filter(lead >= F.lit(lower))
-        if upper is not None:
-            df = df.filter(lead <= F.lit(upper))
-        return df
+        return self.read_for_column_range(
+            key_cols[0], lower, upper, include_deleted=include_deleted
+        )
 
     def _prune_groups_for_column_range(
         self, snap: dict, column: str, lower, upper
@@ -1585,7 +1562,7 @@ class LakeTable:
         in full and rely on the residual filter (leading-KEY pruning
         doesn't have this hazard — all of a key's rows share the key
         value, so no file holding an in-range key is ever dropped —
-        which is why ``read_for_key_range`` needs no such carve-out)."""
+        which is why the leading key needs no such carve-out)."""
         key = snap["key"]
         is_lead = bool(key) and column == key[0]
         delta_buckets = {
@@ -1801,10 +1778,10 @@ class LakeTable:
         staged = rows.withColumn(_BUCKET_COL, self._bucket_expr(snap))
         by_b = self._write_data_files(staged, new_id, self.schema(snap))
         groups = keep + self._new_entries(by_b, snap)
-        self._commit_data(snap, new_id, "compact", groups, None, None)
+        res = self._commit_data(snap, "compact", groups)
         return {
             "skipped": False,
-            "snapshot_id": new_id,
+            "snapshot_id": res["snapshot_id"],
             "rewritten_buckets": sorted(fragmented),
         }
 
@@ -1879,13 +1856,12 @@ class LakeTable:
             sort_exprs=[z],
         )
         groups = self._new_entries(by_b, snap, stat_cols=list(columns))
-        self._commit_data(
-            snap, new_id, "cluster", groups, None,
-            {"cluster_by": list(columns)},
+        res = self._commit_data(
+            snap, "cluster", groups, record={"cluster_by": list(columns)}
         )
         return {
             "skipped": False,
-            "snapshot_id": new_id,
+            "snapshot_id": res["snapshot_id"],
             "cluster_by": list(columns),
             "files": sum(len(g["paths"]) for g in groups),
         }
@@ -1910,8 +1886,8 @@ class LakeTable:
         new_id = snap["snapshot_id"] + 1
         by_bucket = self._write_data_files(kept, new_id, self.schema(snap))
         groups = self._new_entries(by_bucket, snap)
-        self._commit_data(snap, new_id, "vacuum", groups, None, None)
-        return {"skipped": False, "snapshot_id": new_id}
+        res = self._commit_data(snap, "vacuum", groups)
+        return {"skipped": False, "snapshot_id": res["snapshot_id"]}
 
     def rebucket(self, n_buckets: int) -> dict:
         """Bucket-spec evolution (Iceberg's partition-spec evolution for
@@ -1928,28 +1904,31 @@ class LakeTable:
             return {"skipped": True, "reason": "same bucket count"}
         if n_buckets < 1:
             raise ValueError("n_buckets must be >= 1")
-        staged_snap = dict(snap)
-        staged_snap["n_buckets"] = n_buckets
         rows = self._read_groups(snap, snap["file_groups"], include_deleted=True)
-        new_id = snap["snapshot_id"] + 1
         if rows is None:
             groups: list[dict] = []
         else:
-            staged = rows.withColumn(_BUCKET_COL, self._bucket_expr(staged_snap))
-            by_b = self._write_data_files(staged, new_id, self.schema(snap))
+            staged = rows.withColumn(
+                _BUCKET_COL, self._bucket_expr(dict(snap, n_buckets=n_buckets))
+            )
+            by_b = self._write_data_files(
+                staged, snap["snapshot_id"] + 1, self.schema(snap)
+            )
             groups = self._new_entries(by_b, snap)
-        self._commit_data(staged_snap, new_id, "rebucket", groups, None, None)
-        return {"skipped": False, "snapshot_id": new_id, "n_buckets": n_buckets}
+        res = self._commit_data(snap, "rebucket", groups, n_buckets=n_buckets)
+        return {"skipped": False, "snapshot_id": res["snapshot_id"], "n_buckets": n_buckets}
 
     def expire_snapshots(self, retain_last: int = 2) -> dict:
         """Snapshot retention (Iceberg's `expire_snapshots`; the
         reference's backup sidecar keeps N days then drops,
         scripts/backup_db.py): delete all but the newest ``retain_last``
-        snapshot manifests and any data file referenced ONLY by expired
-        snapshots.
+        PUBLISHED snapshot manifests and any data file referenced ONLY
+        by expired snapshots. A staged (WAP) snapshot is kept exactly
+        while the snapshot it was staged on is kept, so pending stages
+        never crowd published history out of ``retain_last``.
 
         Exactly-once survives expiry by construction: committed_epochs
-        is carried CUMULATIVELY into every child snapshot
+        is carried CUMULATIVELY into every child snapshot's summary
         (_commit_data), so the current snapshot alone knows every epoch
         ever applied — dropping history can never re-open an epoch.
         Time travel / read_changes to an expired snapshot raises (its
@@ -1962,20 +1941,18 @@ class LakeTable:
         """
         if retain_last < 1:
             raise ValueError("retain_last must be >= 1")
-        ids = self.snapshot_ids()
-        cur = self.current_snapshot()["snapshot_id"]
-        retained = set(ids[-retain_last:]) | {cur}
-        expired = [i for i in ids if i not in retained]
+        snaps = {i: self.snapshot(i) for i in self.snapshot_ids()}
+        published = [i for i, s in snaps.items() if "staged" not in s]
+        retained = set(published[-retain_last:])
+        retained |= {
+            i for i, s in snaps.items() if "staged" in s and s["parent"] in retained
+        }
+        expired = [i for i in snaps if i not in retained]
         if not expired:
             return {"skipped": True, "reason": "nothing to expire"}
-        live_paths: set[str] = set()
-        for i in retained:
-            for fg in self.snapshot(i)["file_groups"]:
-                live_paths.update(fg["paths"])
-        doomed: set[str] = set()
-        for i in expired:
-            for fg in self.snapshot(i)["file_groups"]:
-                doomed.update(p for p in fg["paths"] if p not in live_paths)
+        doomed = _referenced_paths(snaps[i] for i in expired) - _referenced_paths(
+            snaps[i] for i in retained
+        )
         for i in expired:
             os.remove(self._snap_path(i))
         removed = 0
@@ -2001,10 +1978,7 @@ class LakeTable:
         expire_snapshots. ``grace_seconds`` of mtime slack protects an
         IN-FLIGHT merge whose files exist but whose commit hasn't landed
         yet — never run with 0 grace while a writer is live."""
-        referenced: set[str] = set()
-        for i in self.snapshot_ids():
-            for fg in self.snapshot(i)["file_groups"]:
-                referenced.update(fg["paths"])
+        referenced = _referenced_paths(self.snapshot(i) for i in self.snapshot_ids())
         now = time.time()
         removed = []
         for root, _dirs, files in os.walk(self.data_dir):
@@ -2063,64 +2037,64 @@ class LakeTable:
                 f"snapshot {snapshot_id} is staged (wap_id="
                 f"{target['staged']['wap_id']!r}); publish or abandon it instead"
             )
-        while True:
-            cur = self.current_snapshot()
-            if cur["snapshot_id"] == snapshot_id:
-                return {"skipped": True, "snapshot_id": snapshot_id}
-            new = dict(cur)  # schemas / current_schema_id / next_field_id stay current
-            new["snapshot_id"] = self.snapshot_ids()[-1] + 1
-            new["parent"] = cur["snapshot_id"]
-            new["operation"] = "rollback"
-            new["file_groups"] = target["file_groups"]
-            new["n_buckets"] = target["n_buckets"]
-            summary = dict(target["summary"])
-            summary["rolled_back_to"] = snapshot_id
-            summary["rolled_back_from"] = cur["snapshot_id"]
-            new["summary"] = summary
-            try:
-                self._commit(new)
-                return {
-                    "skipped": False,
-                    "snapshot_id": new["snapshot_id"],
-                    "rolled_back_to": snapshot_id,
-                    "reopened_epochs": sorted(
-                        set(cur["summary"].get("committed_epochs", []))
-                        - set(summary.get("committed_epochs", []))
-                    ),
-                }
-            except CommitConflictError:
-                if self.current_snapshot()["snapshot_id"] != cur["snapshot_id"]:
-                    raise  # a real commit landed mid-rollback: re-decide
-                # a staged claim took the id; re-claim above it
+        cur = self.current_snapshot()
+        if cur["snapshot_id"] == snapshot_id:
+            return {"skipped": True, "snapshot_id": snapshot_id}
+        # schemas / current_schema_id / next_field_id stay current
+        res = self._commit_data(
+            cur,
+            "rollback",
+            target["file_groups"],
+            record={"rolled_back_to": snapshot_id, "rolled_back_from": cur["snapshot_id"]},
+            n_buckets=target["n_buckets"],
+            summary=target["summary"],
+        )
+        return {
+            "skipped": False,
+            "snapshot_id": res["snapshot_id"],
+            "rolled_back_to": snapshot_id,
+            "reopened_epochs": sorted(
+                self.committed_epochs(cur) - self.committed_epochs(target)
+            ),
+        }
 
-    def staged_snapshots(self) -> list[dict]:
-        """All unpublished WAP snapshots, oldest first."""
-        out = []
+    def _wap_manifests(self) -> tuple[list[dict], dict[int, int]]:
+        """Every retained staged manifest, oldest first, and {staged
+        snapshot id: id of the snapshot that published it}, read from the
+        retained publish records."""
+        staged, published = [], {}
         for i in self.snapshot_ids():
             snap = self.snapshot(i)
             if "staged" in snap:
-                out.append(
-                    {
-                        "snapshot_id": i,
-                        "wap_id": snap["staged"]["wap_id"],
-                        "parent": snap["parent"],
-                    }
-                )
-        return out
+                staged.append(snap)
+            elif (pub := snap["commit"].get("published_from_wap")) is not None:
+                published[pub["staged_snapshot_id"]] = i
+        return staged, published
 
-    def _find_staged(self, wap_id: str) -> dict:
-        hits = [s for s in self.staged_snapshots() if s["wap_id"] == wap_id]
+    def staged_snapshots(self) -> list[dict]:
+        """All unpublished WAP snapshots, oldest first."""
+        staged, published = self._wap_manifests()
+        return [
+            {"snapshot_id": s["snapshot_id"], "wap_id": s["staged"]["wap_id"], "parent": s["parent"]}
+            for s in staged
+            if s["snapshot_id"] not in published
+        ]
+
+    def _find_staged(self, wap_id: str) -> tuple[dict, int | None]:
+        """The newest retained staged manifest for ``wap_id``, and the id
+        of the snapshot that published it (None while pending)."""
+        staged, published = self._wap_manifests()
+        hits = [s for s in staged if s["staged"]["wap_id"] == wap_id]
         if not hits:
             raise KeyError(
-                f"no staged snapshot with wap_id={wap_id!r} (published, "
-                "abandoned, or expired)"
+                f"no staged snapshot with wap_id={wap_id!r} (abandoned or expired)"
             )
-        return self.snapshot(hits[-1]["snapshot_id"])
+        return hits[-1], published.get(hits[-1]["snapshot_id"])
 
     def read_staged(self, wap_id: str, include_deleted: bool = False) -> DataFrame:
         """AUDIT read: the table as it WOULD look after publish."""
         return self.read(
-            self._find_staged(wap_id)["snapshot_id"], include_deleted=include_deleted
+            self._find_staged(wap_id)[0]["snapshot_id"], include_deleted=include_deleted
         )
 
     def audit_staged(self, wap_id: str, **kwargs) -> DataFrame:
@@ -2128,72 +2102,61 @@ class LakeTable:
         (``read_changes`` from the staged snapshot's parent — the shape
         an audit rule engine filters: unexpected deletes, null-rate
         spikes, schema drift in payloads)."""
-        st = self._find_staged(wap_id)
+        st, _ = self._find_staged(wap_id)
         return self.read_changes(st["parent"], st["snapshot_id"], **kwargs)
 
     def publish_staged(self, wap_id: str) -> dict:
         """Fast-forward a staged snapshot into the published chain —
         one metadata commit, zero data movement (the staged files are
-        already in place; publish re-lists them under an unstaged id).
+        already in place; publish re-lists them under an unstaged id,
+        with the staged commit's record plus ``published_from_wap``).
         Conflict rule (Iceberg cherry-pick's fast-forward case): the
         published head must still be the staged snapshot's parent;
-        anything else re-stages against fresh state. Idempotent via
-        the epoch ledger: if every epoch the staged commit added over
-        its parent is already published, a retried publish is a no-op.
-        A staged merge that added no epoch always publishes."""
-        st = self._find_staged(wap_id)
-        staged_epochs = set(self.added_epochs(st))
-        while True:
-            cur = self.current_snapshot()
-            if staged_epochs and staged_epochs <= self.committed_epochs(cur):
-                return {
-                    "already_published": True,
-                    "snapshot_id": cur["snapshot_id"],
-                }
-            if st["parent"] != cur["snapshot_id"]:
-                raise CommitConflictError(
-                    f"published head moved ({st['parent']} → "
-                    f"{cur['snapshot_id']}) since wap_id={wap_id!r} was "
-                    "staged; abandon and re-stage against current state"
-                )
-            new = dict(st)
-            del new["staged"]
-            new["snapshot_id"] = self.snapshot_ids()[-1] + 1
-            new["parent"] = cur["snapshot_id"]
-            summary = dict(new["summary"])
-            summary["published_from_wap"] = {
-                "wap_id": wap_id,
-                "staged_snapshot_id": st["snapshot_id"],
-            }
-            new["summary"] = summary
-            try:
-                self._commit(new)
-                return {
-                    "already_published": False,
-                    "snapshot_id": new["snapshot_id"],
-                    "staged_snapshot_id": st["snapshot_id"],
-                }
-            except CommitConflictError:
-                if self.current_snapshot()["snapshot_id"] != cur["snapshot_id"]:
-                    continue  # loop re-checks parent/epochs against new head
-                # staged claim raced the id; re-claim above it
+        anything else re-stages against fresh state. Idempotent twice
+        over: a stage whose publish record is retained, or whose added
+        epochs are all already published, is a no-op."""
+        st, published_by = self._find_staged(wap_id)
+        if published_by is not None:
+            return {"already_published": True, "snapshot_id": published_by}
+        epochs = st["commit"]["epochs"]
+        cur = self.current_snapshot()
+        if epochs and set(epochs) <= self.committed_epochs(cur):
+            return {"already_published": True, "snapshot_id": cur["snapshot_id"]}
+        if st["parent"] != cur["snapshot_id"]:
+            raise CommitConflictError(
+                f"published head moved ({st['parent']} → "
+                f"{cur['snapshot_id']}) since wap_id={wap_id!r} was "
+                "staged; abandon and re-stage against current state"
+            )
+        record = {k: v for k, v in st["commit"].items() if k != "epochs"}
+        record["published_from_wap"] = {
+            "wap_id": wap_id,
+            "staged_snapshot_id": st["snapshot_id"],
+        }
+        res = self._commit_data(
+            cur, st["operation"], st["file_groups"], epochs, record=record,
+            summary=st["summary"],
+        )
+        if res.get("already_committed"):
+            return {"already_published": True, "snapshot_id": res["snapshot_id"]}
+        return {
+            "already_published": False,
+            "snapshot_id": res["snapshot_id"],
+            "staged_snapshot_id": st["snapshot_id"],
+        }
 
     def abandon_staged(self, wap_id: str) -> dict:
         """Drop an unpublished staged snapshot: its manifest is removed
         (same operation expiry performs) and its data files become
         orphans for ``remove_orphan_files`` — grace-protected, so an
         in-flight audit reader finishes before GC can touch them."""
-        st = self._find_staged(wap_id)
+        st, _ = self._find_staged(wap_id)
         os.remove(self._snap_path(st["snapshot_id"]))
         # only files no REMAINING snapshot references actually orphan
         # (a CoW staged merge carries its parent's untouched groups)
-        still_live: set[str] = set()
-        for i in self.snapshot_ids():
-            for fg in self.snapshot(i)["file_groups"]:
-                still_live.update(fg["paths"])
-        orphaned = {
-            p for fg in st["file_groups"] for p in fg["paths"]
-        } - still_live
+        orphaned = _referenced_paths([st]) - _referenced_paths(
+            self.snapshot(i) for i in self.snapshot_ids()
+        )
         return {
             "snapshot_id": st["snapshot_id"],
             "orphaned_files": len(orphaned),

@@ -33,7 +33,11 @@ from pyspark.sql import functions as F
 from web3research_etl_spark.functions.extract import extract_text_udf
 from web3research_etl_spark.lake.table import LakeTable
 from web3research_etl_spark.ledger import ledger_rows_for_batch
-from web3research_etl_spark.registry import parse_payload, sync_table_schema
+from web3research_etl_spark.registry import (
+    parse_payload,
+    registry_changes,
+    sync_table_schema,
+)
 
 _CORE_COLS = ["op", "url", "warc_ts", "event_seq", "html", "lang"]
 
@@ -73,8 +77,10 @@ def apply_changelog_batch(
     if registry is not None:
         max_v = batch.agg(F.max("payload_version")).collect()[0][0]
         if max_v is not None:
-            sync_table_schema(table, registry, max_v)
-            batch = parse_payload(batch, registry, max_v)
+            # one registry collect per batch, shared by ALTER and parse
+            changes = registry_changes(registry, max_v)
+            sync_table_schema(table, changes)
+            batch = parse_payload(batch, changes)
             table_cols = {f.name for f in table.schema().fields}
             extra_cols = [
                 c

@@ -92,15 +92,15 @@ def column_lineages(changes: list[dict]) -> list[dict]:
     return lineages
 
 
-def sync_table_schema(table: LakeTable, registry: DataFrame, up_to_version: int) -> int:
-    """Resolve registry → live schema diff; issue one ALTER commit for the
-    NET missing changes. Idempotent: diffs target state vs live state, so
-    re-running (or running after a partial history) never re-applies a
-    change whose effect is already visible."""
-    lineages = column_lineages(registry_changes(registry, up_to_version))
+def sync_table_schema(table: LakeTable, changes: list[dict]) -> int:
+    """Resolve registry changes (``registry_changes``) → live schema
+    diff; issue one ALTER commit for the NET missing changes.
+    Idempotent: diffs target state vs live state, so re-running (or
+    running after a partial history) never re-applies a change whose
+    effect is already visible."""
     have = {f.name: f.dataType.simpleString() for f in table.schema().fields}
     pending: list[dict] = []
-    for ln in lineages:
+    for ln in column_lineages(changes):
         final = ln["names"][-1]
         live_name = next((n for n in reversed(ln["names"]) if n in have), None)
         if live_name is None:
@@ -117,38 +117,23 @@ def sync_table_schema(table: LakeTable, registry: DataFrame, up_to_version: int)
     return table.current_snapshot()["snapshot_id"]
 
 
-def parse_payload(batch: DataFrame, registry: DataFrame, up_to_version: int) -> DataFrame:
+def parse_payload(batch: DataFrame, changes: list[dict]) -> DataFrame:
     """Extract registry-declared payload columns from the JSON payload,
     normalized to the final (post-rename, post-widen) names/types.
 
-    Old payloads that used a pre-rename key are mapped via coalesce over
-    both names; missing keys are null. Pure `from_json` — JVM-side.
+    Each column lineage parses every name it ever had at its final type;
+    old payloads that used a pre-rename key are mapped via coalesce over
+    those names, newest first; missing keys are null. Pure `from_json` —
+    JVM-side.
     """
-    changes = registry_changes(registry, up_to_version)
-    final_cols: dict[str, str] = {}
-    renames: dict[str, str] = {}
-    for ch in changes:
-        if ch["change"] == "add":
-            final_cols[ch["name"]] = ch["type"]
-        elif ch["change"] == "rename":
-            renames[ch["name"]] = ch["renamed_from"]
-            final_cols[ch["name"]] = final_cols.pop(ch["renamed_from"], ch["type"])
-        elif ch["change"] == "widen":
-            final_cols[ch["name"]] = ch["type"]
-
-    # parse with a union schema: every name that ever appeared, widest type
-    parse_fields = []
-    for name, typ in final_cols.items():
-        parse_fields.append(f"{name} {typ}")
-        if name in renames:
-            parse_fields.append(f"{renames[name]} {typ}")
-    json_schema = ", ".join(parse_fields)
+    lineages = column_lineages(changes)
+    json_schema = ", ".join(
+        f"{name} {ln['type']}" for ln in lineages for name in ln["names"]
+    )
     parsed = batch.withColumn("_p", F.from_json(F.col("payload"), json_schema))
-    for name in final_cols:
-        src = (
-            F.coalesce(F.col(f"_p.{name}"), F.col(f"_p.{renames[name]}"))
-            if name in renames
-            else F.col(f"_p.{name}")
+    for ln in lineages:
+        srcs = [F.col(f"_p.{name}") for name in reversed(ln["names"])]
+        parsed = parsed.withColumn(
+            ln["names"][-1], srcs[0] if len(srcs) == 1 else F.coalesce(*srcs)
         )
-        parsed = parsed.withColumn(name, src)
     return parsed.drop("_p")
