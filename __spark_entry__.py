@@ -243,7 +243,7 @@ def q_fanout_merge_state(spark, sf_dir):
         for r in [*_FANOUT_ROUTES, REST_ROUTE]
     }
 
-    def _merge_fn(table, df, epoch_id, ledger=None, registry=None, salt_partitions=None):
+    def _merge_fn(table, df, epoch_id, registry=None, salt_partitions=None):
         return table.merge_changelog(df, epoch_id=epoch_id, salt_partitions=salt_partitions)
 
     apply_fanout_batch(

@@ -32,10 +32,12 @@ def test_cli_init_then_check(tmp_path):
 
     out = _run_cli(
         "init", "--source", f"{tmp_path}/ch", "--table", f"{tmp_path}/pages",
-        "--ledger", f"{tmp_path}/ledger",
     )
     stats = json.loads(out.strip().splitlines()[-1])
-    assert stats["rows"] > 0 and stats["epochs"]
+    with open(f"{tmp_path}/pages/metadata/v{stats['snapshot']:08d}.json") as f:
+        committed = json.load(f)["summary"]["committed_epochs"]
+    assert stats["rows"] > 0 and stats["epochs"] == len(committed) > 0
+    assert stats["last_epoch"] == max(committed)
 
     out = _run_cli("check", "--source", f"{tmp_path}/ch", "--table", f"{tmp_path}/pages")
     rec = json.loads(out.strip().splitlines()[0])["reconcile"]
@@ -45,7 +47,7 @@ def test_cli_init_then_check(tmp_path):
     # equals the live table
     out = _run_cli(
         "replay", "--source", f"{tmp_path}/ch", "--table", f"{tmp_path}/pages",
-        "--ledger", f"{tmp_path}/ledger", "--apply-tail",
+        "--apply-tail",
     )
     rep = json.loads(out.strip().splitlines()[-1])
     assert rep["converged"] and rep["live"] == rep["replayed"]

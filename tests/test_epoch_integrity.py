@@ -1,18 +1,16 @@
-"""Epoch-id type integrity (regression for the replay-tail ledger
+"""Epoch-id type integrity (regression for the replay-tail epoch
 corruption defect).
 
-The ledger is append-only parquet with a LongType epoch_id; one write
-with a string epoch poisons every later ledger read
-(PARQUET_COLUMN_DATA_TYPE_MISMATCH) and breaks sorted() over the pages
-table's committed_epochs. Three layers now enforce int epochs:
+One write with a string epoch breaks sorted() over the pages table's
+committed_epochs (and, while lineage lived in a parquet ledger, poisoned
+every later ledger read). Two layers enforce int epochs:
 
 1. LakeTable.append / merge_changelog raise TypeError on non-int epochs;
-2. ledger_rows_for_batch casts rows to LEDGER_SCHEMA before append;
-3. cli replay --apply-tail / check --heal derive integer synthetic
+2. cli replay --apply-tail / check --heal derive integer synthetic
    epochs via LakeTable.synthetic_epoch_id.
 
-The e2e test replays a REAL tail (ledger behind the source) through the
-CLI and proves the ledger remains readable and resume/init still work.
+The e2e test replays a REAL tail (table offsets behind the source)
+through the CLI and proves resume/init still work after it.
 """
 
 import glob
@@ -25,7 +23,7 @@ from pyspark.sql import functions as F
 
 from web3research_etl_spark.changelog import write_changelog_dir
 from web3research_etl_spark.lake.table import LakeTable
-from web3research_etl_spark.ledger import open_ledger, resume_offsets
+from web3research_etl_spark.ledger import resume_offsets
 from web3research_etl_spark.operators.apply import apply_changelog_batch
 from web3research_etl_spark.schemas import PAGES_KEY, PAGES_SCHEMA, PAGES_VERSION_ORDER
 
@@ -65,9 +63,9 @@ def test_synthetic_epoch_ids_are_int_and_distinct(spark, tmp_table_dir):
 
 @pytest.mark.slow
 def test_replay_apply_tail_keeps_ledger_readable(spark, tmp_table_dir):
-    """Real-tail scenario: the table+ledger know only a prefix of the
+    """Real-tail scenario: the table knows only a prefix of the
     changelog; `replay --apply-tail` must (a) converge and (b) leave the
-    ledger parquet type-clean so resume/check keep working after."""
+    offsets and epochs type-clean so resume/check keep working after."""
     from web3research_etl_spark.cli import main as cli_main
     from web3research_etl_spark.registry import default_registry
 
@@ -82,21 +80,20 @@ def test_replay_apply_tail_keeps_ledger_readable(spark, tmp_table_dir):
         shutil.copy(f_, part_dir)
 
     t = _mk_table(spark, tmp_table_dir)
-    ledger = open_ledger(spark, f"{tmp_table_dir}/ledger")
     reg = default_registry(spark)
     prefix = spark.read.parquet(part_dir)
-    apply_changelog_batch(t, prefix, epoch_id=0, ledger=ledger, registry=reg)
-    offs_before = resume_offsets(ledger)
-    assert offs_before  # ledger has real offsets, strictly behind full
+    apply_changelog_batch(t, prefix, epoch_id=0, registry=reg)
+    offs_before = resume_offsets(t)
+    assert offs_before  # the table has real offsets, strictly behind full
 
     rc = cli_main([
         "replay", "--source", full_dir, "--table", f"{tmp_table_dir}/pages",
-        "--ledger", f"{tmp_table_dir}/ledger", "--apply-tail",
+        "--apply-tail",
     ])
     assert rc == 0  # tail applied → converged
 
-    # the ledger must still be readable and advanced past the prefix
-    offs_after = resume_offsets(ledger)
+    # the offsets must have advanced past the prefix
+    offs_after = resume_offsets(t)
     assert offs_after and all(
         offs_after[p] >= offs_before.get(p, -1) for p in offs_after
     )
@@ -111,19 +108,5 @@ def test_replay_apply_tail_keeps_ledger_readable(spark, tmp_table_dir):
     # a follow-up check over the full source sees a converged table
     rc = cli_main([
         "check", "--source", full_dir, "--table", f"{tmp_table_dir}/pages",
-        "--ledger", f"{tmp_table_dir}/ledger",
     ])
     assert rc == 0
-
-
-def test_apply_tail_without_ledger_fails_fast(spark, tmp_table_dir, capsys):
-    from web3research_etl_spark.cli import main as cli_main
-
-    write_changelog_dir(spark, f"{tmp_table_dir}/ch", 100)
-    _mk_table(spark, tmp_table_dir)
-    rc = cli_main([
-        "replay", "--source", f"{tmp_table_dir}/ch",
-        "--table", f"{tmp_table_dir}/pages", "--apply-tail",
-    ])
-    assert rc == 2
-    assert "--apply-tail requires --ledger" in capsys.readouterr().err

@@ -8,7 +8,7 @@
 3. schema evolution mid-stream (payload v1→v2→v3) lands adds/renames/
    widens correctly;
 4. resume-from-checkpoint: replay starting from a mid-run snapshot's
-   ledger offsets reconverges.
+   committed source offsets reconverges.
 """
 
 import duckdb
@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from web3research_etl_spark.changelog import generate_changelog
 from web3research_etl_spark.lake.table import LakeTable
-from web3research_etl_spark.ledger import open_ledger, resume_offsets
+from web3research_etl_spark.ledger import resume_offsets
 from web3research_etl_spark.operators.apply import apply_changelog_batch
 from web3research_etl_spark.registry import default_registry
 from web3research_etl_spark.schemas import PAGES_KEY, PAGES_SCHEMA, PAGES_VERSION_ORDER
@@ -261,9 +261,8 @@ def test_resume_from_ledger_offsets(spark, tmp_table_dir, changelog_path):
     half = N_EVENTS // 2
     d = tmp_table_dir
     t = _new_table(spark, d, "resume")
-    ledger = open_ledger(spark, f"{d}/resume_ledger")
-    apply_changelog_batch(t, ch.filter(F.col("event_seq") < half), 0, ledger=ledger)
-    offs = resume_offsets(ledger)
+    apply_changelog_batch(t, ch.filter(F.col("event_seq") < half), 0)
+    offs = resume_offsets(t)
     assert offs and all(v < half for v in offs.values())
     # resume: per-partition tail strictly after the recorded offsets
     tail_conds = [
@@ -273,7 +272,7 @@ def test_resume_from_ledger_offsets(spark, tmp_table_dir, changelog_path):
     cond = tail_conds[0]
     for c in tail_conds[1:]:
         cond = cond | c
-    apply_changelog_batch(t, ch.filter(cond), 1, ledger=ledger)
+    apply_changelog_batch(t, ch.filter(cond), 1)
 
     t_ref = _run(spark, d, "resume_ref", ch, [(0, F.lit(True))])
     assert t.state_hash() == t_ref.state_hash()

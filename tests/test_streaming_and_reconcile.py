@@ -6,13 +6,21 @@ from pyspark.sql import functions as F
 
 from web3research_etl_spark.changelog import generate_changelog
 from web3research_etl_spark.lake.table import LakeTable
-from web3research_etl_spark.ledger import open_ledger
 from web3research_etl_spark.operators.apply import apply_changelog_batch
 from web3research_etl_spark.operators.reconcile import expected_state, heal, reconcile
 from web3research_etl_spark.schemas import PAGES_KEY, PAGES_SCHEMA, PAGES_VERSION_ORDER
 from web3research_etl_spark.streaming.pipeline import run_sync
 
 N = 2000
+
+
+def _lineage(t):
+    """(epoch, per-partition source row) of every commit record."""
+    out = []
+    for i in t.snapshot_ids():
+        c = t.snapshot(i)["commit"]
+        out += [(e, s) for e in c["epochs"] for s in c.get("sources", [])]
+    return out
 
 
 def _new_table(spark, d, name, n_buckets=8):
@@ -33,10 +41,9 @@ def test_streaming_matches_batch(spark, tmp_table_dir, ch_dir):
     ch = spark.read.parquet(ch_dir)
 
     t_stream = _new_table(spark, tmp_table_dir, "stream")
-    ledger = open_ledger(spark, f"{tmp_table_dir}/ledger")
     q = run_sync(
         spark, ch_dir, t_stream, f"{tmp_table_dir}/ckpt",
-        ledger=ledger, available_now=True, max_files_per_trigger=2,
+        available_now=True, max_files_per_trigger=2,
     )
     q.awaitTermination()
 
@@ -45,9 +52,8 @@ def test_streaming_matches_batch(spark, tmp_table_dir, ch_dir):
     assert t_stream.state_hash() == t_batch.state_hash()
     # multiple micro-batches actually happened (maxFilesPerTrigger=2, 6 files)
     assert len(t_stream.committed_epochs()) >= 3
-    # ledger saw every epoch
-    assert set(ledger.read().select("epoch_id").distinct().toPandas()["epoch_id"]) == \
-        t_stream.committed_epochs()
+    # every epoch's commit recorded its source lineage
+    assert {e for e, _ in _lineage(t_stream)} == t_stream.committed_epochs()
 
 
 def test_streaming_restart_is_exactly_once(spark, tmp_table_dir, ch_dir):
@@ -68,7 +74,7 @@ def test_streaming_restart_is_exactly_once(spark, tmp_table_dir, ch_dir):
 def test_sync_dedup_watermark_same_state_fewer_rows(spark, tmp_table_dir, ch_dir):
     """run_sync(dedup_watermark=...) drops re-delivered events before
     the merge: final state is IDENTICAL (LWW is the backstop either
-    way), but fewer rows reach the sink — the ledger's rows_in, counted
+    way), but fewer rows reach the sink — the lineage's rows_in, counted
     at the sink's mouth, is the shuffle-volume receipt. The generator
     emits ~5% duplicate events, so the delta must be positive.
 
@@ -78,23 +84,21 @@ def test_sync_dedup_watermark_same_state_fewer_rows(spark, tmp_table_dir, ch_dir
     48h makes nothing late while duplicates (adjacent by construction)
     are still all caught."""
     t_plain = _new_table(spark, tmp_table_dir, "nodedup")
-    led_plain = open_ledger(spark, f"{tmp_table_dir}/led_plain")
     run_sync(
         spark, ch_dir, t_plain, f"{tmp_table_dir}/ck_plain",
-        ledger=led_plain, available_now=True, max_files_per_trigger=2,
+        available_now=True, max_files_per_trigger=2,
     ).awaitTermination()
 
     t_dedup = _new_table(spark, tmp_table_dir, "dedup")
-    led_dedup = open_ledger(spark, f"{tmp_table_dir}/led_dedup")
     run_sync(
         spark, ch_dir, t_dedup, f"{tmp_table_dir}/ck_dedup",
-        ledger=led_dedup, available_now=True, max_files_per_trigger=2,
+        available_now=True, max_files_per_trigger=2,
         dedup_watermark="48 hours",
     ).awaitTermination()
 
     assert t_plain.state_hash() == t_dedup.state_hash()
-    rows_plain = led_plain.read().agg(F.sum("rows_in")).collect()[0][0]
-    rows_dedup = led_dedup.read().agg(F.sum("rows_in")).collect()[0][0]
+    rows_plain = sum(s["rows_in"] for _, s in _lineage(t_plain))
+    rows_dedup = sum(s["rows_in"] for _, s in _lineage(t_dedup))
     assert rows_dedup < rows_plain  # duplicates died before the merge
     # the deduped run saw at most one copy of every event
     assert rows_dedup >= N

@@ -4,8 +4,8 @@ Reference (/root/reference/src/main.rs:16-118): `init` (bounded
 backfill), `sync` (unbounded tail), `check` (reconcile + heal). Ours:
 
     spark-submit --py-files web3research_etl_spark.zip -m ... cli.py \
-        init  --source DIR --table DIR [--ledger DIR] [--batch-files N]
-        sync  --source DIR --table DIR --checkpoint DIR [--ledger DIR]
+        init  --source DIR --table DIR [--batch-files N]
+        sync  --source DIR --table DIR --checkpoint DIR
         check --source DIR --table DIR [--heal]
         changes --table DIR --from-snapshot A [--to-snapshot B] [--out DIR]
         maintain --table DIR [--compact [--compact-min-groups G]]
@@ -48,7 +48,6 @@ def _common(sub: argparse.ArgumentParser) -> None:
         "broker-transport stand-in, decoded by the same decode_wire a real "
         "format('kafka') load would use",
     )
-    sub.add_argument("--ledger", default=None, help="lineage ledger dir")
     sub.add_argument(
         "--salt-partitions",
         default=None,
@@ -259,8 +258,8 @@ def build_parser() -> argparse.ArgumentParser:
     replay.add_argument(
         "--apply-tail",
         action="store_true",
-        help="first apply events past the ledger's resume offsets to the "
-        "live table (resume-from-checkpoint), then compare",
+        help="first apply events past the table's committed source "
+        "offsets to it (resume-from-checkpoint), then compare",
     )
 
     changes = subs.add_parser(
@@ -572,11 +571,9 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps({"abandon": table.abandon_staged(args.abandon)}))
         return 0
 
-    from web3research_etl_spark.ledger import open_ledger
     from web3research_etl_spark.registry import default_registry
 
     table = _open_table(spark, args.table)
-    ledger = open_ledger(spark, args.ledger) if args.ledger else None
     registry = None if args.no_registry else default_registry(spark)
 
     if args.cmd in ("init", "sync"):
@@ -660,7 +657,6 @@ def main(argv: list[str] | None = None) -> int:
             table,
             checkpoint,
             source=source_stream,
-            ledger=ledger,
             registry=registry,
             salt_partitions=args.salt_partitions,
             available_now=(args.cmd == "init"),
@@ -691,12 +687,15 @@ def main(argv: list[str] | None = None) -> int:
         if args.cmd == "init":
             q.awaitTermination()
             q.w3r_join_sidecars()
+            # the epoch list grows with history: print its size and end
+            epochs = table.committed_epochs()
             print(
                 json.dumps(
                     {
                         "rows": table.read().count(),
                         "snapshot": table.current_snapshot()["snapshot_id"],
-                        "epochs": sorted(table.committed_epochs()),
+                        "epochs": len(epochs),
+                        "last_epoch": max(epochs, default=None),
                     }
                 )
             )
@@ -718,18 +717,11 @@ def main(argv: list[str] | None = None) -> int:
 
         changelog = _read_changelog(spark, args)
         if args.apply_tail:
-            if ledger is None:
-                print(
-                    "error: --apply-tail requires --ledger (no resume offsets "
-                    "without a lineage ledger)",
-                    file=sys.stderr,
-                )
-                return 2
-            offsets = resume_offsets(ledger)
+            offsets = resume_offsets(table)
             if not offsets:
-                # Empty ledger: the whole changelog is the tail.
+                # No committed offsets: the whole changelog is the tail.
                 print(
-                    "warning: ledger has no offsets; treating the entire "
+                    "warning: table has no source offsets; treating the entire "
                     "changelog as the tail",
                     file=sys.stderr,
                 )
@@ -745,7 +737,6 @@ def main(argv: list[str] | None = None) -> int:
                 table,
                 tail_df,
                 epoch_id=table.synthetic_epoch_id("replay-tail"),
-                ledger=ledger,
                 registry=registry,
             )
         scratch_dir = tempfile.mkdtemp(prefix="w3r_replay_")

@@ -18,10 +18,12 @@ design is 1:1 with Iceberg's model so a real catalog slots in):
   reference's at-least-once + ReplacingMergeTree convergence
   (/root/reference/src/ch_eth/init.rs:402-448) to exactly-once state.
 - **two metadata maps per manifest**: ``summary`` is CUMULATIVE table
-  state, carried into every child — ``committed_epochs`` and consumer
+  state, carried into every child — ``committed_epochs``, the
+  per-source-partition resume point ``source_offsets`` and consumer
   markers such as ``view_through``/``index_through``. ``commit`` is the
   record of that one commit, never copied forward — the ``epochs`` it
-  added, ``merge_timings``, rollback provenance
+  added, their per-partition lineage ``sources``, ``merge_timings``,
+  rollback provenance
   (``rolled_back_to``/``rolled_back_from``), WAP provenance
   (``published_from_wap``), ``cluster_by``. Every manifest after
   ``create`` is written by one OCC loop, ``_commit_data``.
@@ -101,9 +103,9 @@ def _parse_type(ddl: str) -> T.DataType:
 
 
 def _check_epoch_id(epoch_id: Any) -> None:
-    """Epoch ids flow into the ledger's LongType column and into
-    committed_epochs (sorted at startup); a single non-int epoch poisons
-    the ledger parquet type for every later read. Reject early."""
+    """Epoch ids flow into committed_epochs and every commit record,
+    and are sorted and compared as ints; a single non-int epoch breaks
+    sorted() over the epochs for every later reader. Reject early."""
     if epoch_id is not None and (isinstance(epoch_id, bool) or not isinstance(epoch_id, int)):
         raise TypeError(
             f"epoch_id must be an int or None, got {type(epoch_id).__name__}: "
@@ -394,10 +396,9 @@ class LakeTable:
     def synthetic_epoch_id(self, kind: str = "heal") -> int:
         """Integer epoch for out-of-band applies (heal, replay-tail).
 
-        Epoch ids MUST stay integers end-to-end: they land in the
-        ledger's LongType epoch_id column and in committed_epochs, so a
-        single string epoch poisons the ledger parquet type (every later
-        resume_offsets read fails) and breaks sorted() over epochs.
+        Epoch ids MUST stay integers end-to-end: they land in
+        committed_epochs and the commit records, so a single string
+        epoch breaks sorted() over epochs (see ``_check_epoch_id``).
         Derivation is current snapshot id + a per-kind high base —
         distinct from streaming epochs, monotone across invocations, and
         stable across a crash-retry of the same apply (idempotent skip).
@@ -697,8 +698,7 @@ class LakeTable:
     def _write_data_files(
         self,
         df: DataFrame,
-        snapshot_id: int,
-        schema: T.StructType,
+        snap: dict,
         salt_partitions: int | None = None,
         pre_write_transform=None,
         extra_shuffle_expr: F.Column | None = None,
@@ -707,6 +707,8 @@ class LakeTable:
     ) -> dict[int, list[str]]:
         """Write df (must carry _bucket) partitioned by bucket; return
         {bucket: [relative paths]}. One shuffle, one job, all buckets.
+        ``snap`` is the snapshot the caller planned from: its schema,
+        key, bucket count and next id shape the write.
 
         The pre-write repartition is pinned to ``n_buckets`` output
         partitions at EVERY parallelism level: the file layout, shuffle
@@ -718,10 +720,9 @@ class LakeTable:
         # uuid suffix: two OCC writers preparing the same next id must
         # never stage into one directory (the loser rebases to a higher
         # id, but its files are already on disk under this name)
-        out_rel = os.path.join("data", f"s{snapshot_id:08d}-{uuid.uuid4().hex[:8]}")
+        out_rel = os.path.join("data", f"s{snap['snapshot_id'] + 1:08d}-{uuid.uuid4().hex[:8]}")
         out_abs = os.path.join(self.path, out_rel)
-        snap = self.current_snapshot()
-        ordered = [f.name for f in schema.fields] + [_DELETED_COL]
+        ordered = [f.name for f in self.schema(snap).fields] + [_DELETED_COL]
         if _DELETED_COL not in df.columns:
             df = df.withColumn(_DELETED_COL, F.lit(False))
         staged = df.select(_BUCKET_COL, *ordered)
@@ -890,14 +891,13 @@ class LakeTable:
         return out
 
     def append(self, df: DataFrame, epoch_id: Any = None, summary_extra: dict | None = None) -> int:
-        """Blind append (no dedup) — the ledger/changelog path."""
+        """Blind append (no dedup) — the changelog path."""
         _check_epoch_id(epoch_id)
         snap = self.current_snapshot()
         if epoch_id is not None and epoch_id in self.committed_epochs(snap):
             return snap["snapshot_id"]
-        new_id = snap["snapshot_id"] + 1
         staged = df.withColumn(_BUCKET_COL, self._bucket_expr(snap) if snap["key"] else F.lit(0))
-        by_bucket = self._write_data_files(staged, new_id, self.schema(snap))
+        by_bucket = self._write_data_files(staged, snap)
         new_entries = self._new_entries(by_bucket, snap)
         new_groups = list(snap["file_groups"]) + new_entries
         # appends never replace file groups → touched=∅: always
@@ -918,6 +918,7 @@ class LakeTable:
         pre_write_transform=None,
         write_mode: str = "cow",
         stage_wap_id: str | None = None,
+        sources: list[dict] | None = None,
     ) -> dict:
         """MERGE INTO: apply a changelog batch (op ∈ I/U/D).
 
@@ -975,6 +976,10 @@ class LakeTable:
         to drop it (files GC as orphans). The epoch marker only binds
         at publish: an unpublished epoch re-merges on retry, exactly
         the exactly-once contract extended with an audit gate.
+
+        ``sources``: the batch's per-source-partition lineage rows
+        (``ledger.ledger_rows_for_batch``), recorded as ``commit.sources``
+        and folded into ``summary.source_offsets`` by the same claim.
         """
         _check_epoch_id(epoch_id)
         # Per-epoch driver-serial instrumentation (VERDICT r4 next #2):
@@ -1088,7 +1093,6 @@ class LakeTable:
             .withColumn(_BUCKET_COL, self._bucket_expr(snap))
         )
 
-        new_id = snap["snapshot_id"] + 1
         # Python-side plan construction up to this point (staged/LWW
         # expression trees) — pure driver work, parallelism-independent
         timings["plan_ms"] = round(
@@ -1100,8 +1104,7 @@ class LakeTable:
         try:
             by_bucket = self._write_data_files(
                 winners,
-                new_id,
-                schema,
+                snap,
                 salt_partitions=salt_partitions,
                 pre_write_transform=pre_write_transform,
             )
@@ -1126,9 +1129,12 @@ class LakeTable:
             )
         else:
             operation, new_groups = "merge", keep_groups + new_entries
+        record: dict[str, Any] = {"merge_timings": timings}
+        if sources is not None:
+            record["sources"] = sources
         res = self._commit_data(
             snap, operation, new_groups, [] if epoch_id is None else [epoch_id],
-            summary_extra, record={"merge_timings": timings}, touched=touched_set,
+            summary_extra, record=record, touched=touched_set,
             new_entries=new_entries, staged_wap=stage_wap_id,
         )
         if res.get("already_committed"):
@@ -1298,7 +1304,10 @@ class LakeTable:
 
         - ``summary``: cumulative state, carried forward — its
           ``committed_epochs`` gains ``epochs``, ``summary_extra`` (the
-          consumer markers) is merged in;
+          consumer markers) is merged in, and ``source_offsets`` takes
+          the per-partition max with ``record["sources"]`` — against the
+          head actually claimed, so a rebase never moves a racer's
+          offsets backwards;
         - ``commit``: this commit's own record, never carried forward —
           ``{"epochs": epochs, **record}``.
 
@@ -1333,6 +1342,12 @@ class LakeTable:
             seen = set(prior)
             summary["committed_epochs"] = prior + [e for e in epochs if e not in seen]
             summary.update(summary_extra or {})
+            offsets = dict(summary.get("source_offsets", {}))
+            for src in (record or {}).get("sources", ()):
+                p, seq = str(src["source_partition"]), src["max_event_seq"]
+                offsets[p] = max(offsets.get(p, seq), seq)
+            if offsets:
+                summary["source_offsets"] = offsets
             new.update(
                 snapshot_id=new_id,
                 parent=base["snapshot_id"],
@@ -1774,9 +1789,8 @@ class LakeTable:
         keep = [fg for fg in snap["file_groups"] if fg["bucket"] not in fragmented]
         to_rewrite = [fg for fgs in fragmented.values() for fg in fgs]
         rows = self._read_groups(snap, to_rewrite, include_deleted=True)
-        new_id = snap["snapshot_id"] + 1
         staged = rows.withColumn(_BUCKET_COL, self._bucket_expr(snap))
-        by_b = self._write_data_files(staged, new_id, self.schema(snap))
+        by_b = self._write_data_files(staged, snap)
         groups = keep + self._new_entries(by_b, snap)
         res = self._commit_data(snap, "compact", groups)
         return {
@@ -1846,11 +1860,9 @@ class LakeTable:
         staged = rows.withColumn(
             _BUCKET_COL, self._bucket_expr(snap) if snap["key"] else F.lit(0)
         )
-        new_id = snap["snapshot_id"] + 1
         by_b = self._write_data_files(
             staged,
-            new_id,
-            schema,
+            snap,
             extra_shuffle_expr=band,
             n_partitions=snap["n_buckets"] * max(1, files_per_bucket),
             sort_exprs=[z],
@@ -1883,8 +1895,7 @@ class LakeTable:
         kept = all_rows.filter(
             ~(F.col(_DELETED_COL) & (F.col(vorder[0]) < F.lit(older_than_ts)))
         ).withColumn(_BUCKET_COL, self._bucket_expr(snap))
-        new_id = snap["snapshot_id"] + 1
-        by_bucket = self._write_data_files(kept, new_id, self.schema(snap))
+        by_bucket = self._write_data_files(kept, snap)
         groups = self._new_entries(by_bucket, snap)
         res = self._commit_data(snap, "vacuum", groups)
         return {"skipped": False, "snapshot_id": res["snapshot_id"]}
@@ -1911,9 +1922,7 @@ class LakeTable:
             staged = rows.withColumn(
                 _BUCKET_COL, self._bucket_expr(dict(snap, n_buckets=n_buckets))
             )
-            by_b = self._write_data_files(
-                staged, snap["snapshot_id"] + 1, self.schema(snap)
-            )
+            by_b = self._write_data_files(staged, snap)
             groups = self._new_entries(by_b, snap)
         res = self._commit_data(snap, "rebucket", groups, n_buckets=n_buckets)
         return {"skipped": False, "snapshot_id": res["snapshot_id"], "n_buckets": n_buckets}
@@ -2021,10 +2030,11 @@ class LakeTable:
           live schema — and the rename-tracked key/version-order specs
           keep working. Only ``n_buckets`` is restored from the target
           (it describes the restored file layout).
-        - **the idempotence ledger rewinds with the data**:
-          ``committed_epochs`` is restored to the target's, so the
-          undone epochs are REOPENED — replaying the changelog from
-          the rollback point reconverges to the identical head state
+        - **the idempotence markers rewind with the data**:
+          ``committed_epochs`` and ``source_offsets`` are restored to
+          the target's, so the undone epochs are REOPENED — replaying
+          the changelog from the rollback point reconverges to the
+          identical head state
           (the reference's delete-then-reinsert reorg, SURVEY §2 P11,
           at snapshot granularity instead of key granularity).
 

@@ -1,11 +1,13 @@
-"""Per-partition lineage ledger (FIXTURES.md §4).
+"""Per-partition source lineage (FIXTURES.md §4).
 
-The reference resumes from a single scalar — ``SELECT max(number) FROM
-blocks`` (/root/reference/src/ch_eth/sync.rs:341-343) — and keeps no
-per-partition bookkeeping. Ours records, per (epoch, source_partition):
-max offset, watermark, and row counts, appended atomically in the same
-turn as the data commit, so `resume_offsets` can restart any source
-shard exactly where it left off.
+The reference resumes from ``SELECT max(number) FROM blocks``
+(/root/reference/src/ch_eth/sync.rs:341-343): a resume point taken from
+the data itself cannot disagree with it. Ours keeps that per source
+partition: each applied epoch's ONE data commit records the batch's
+per-partition rows (``commit.sources``) and the cumulative
+``summary.source_offsets`` — so there is no crash window between data
+and lineage, ``rollback_to`` rewinds the offsets, and a WAP-staged
+merge's offsets bind only when it publishes.
 """
 
 from __future__ import annotations
@@ -20,42 +22,34 @@ from web3research_etl_spark.schemas import LEDGER_SCHEMA
 
 
 def open_ledger(spark: SparkSession, path: str) -> LakeTable:
+    """Deprecated: lineage rides in the data table's manifests and no
+    engine path writes this table any more. Kept so existing callers
+    that still open one keep working."""
     if os.path.exists(os.path.join(path, "metadata")):
         return LakeTable.load(spark, path)
     return LakeTable.create(spark, path, LEDGER_SCHEMA, key=[], n_buckets=1)
 
 
-def ledger_rows_for_batch(
-    batch: DataFrame, epoch_id: int, committed_at_snapshot: int
-) -> DataFrame:
-    """One aggregation over the micro-batch → one ledger row per source
-    partition. Map-side combine keeps this a cheap pass.
-
-    Rows are cast to LEDGER_SCHEMA column-by-column before they leave
-    here: the ledger is append-only parquet, so one wrongly-typed column
-    (e.g. a string epoch_id) poisons every later read with
-    PARQUET_COLUMN_DATA_TYPE_MISMATCH. Belt-and-braces with the int
-    check in LakeTable._check_epoch_id."""
-    agg = batch.groupBy("source_partition").agg(
-        F.lit(epoch_id).alias("epoch_id"),
+def ledger_rows_for_batch(batch: DataFrame) -> list[dict]:
+    """One aggregation over the micro-batch, collected (one Spark job):
+    one lineage row per source partition, plus ``max_payload_version``
+    when the batch carries ``payload_version`` — the registry's input,
+    so the registry path needs no job of its own. Map-side combine keeps
+    this a cheap pass over skinny columns."""
+    aggs = [
         F.max("event_seq").alias("max_event_seq"),
-        F.max("warc_ts").alias("watermark_ts"),
+        F.max("warc_ts").cast("string").alias("watermark_ts"),  # JSON-safe
         F.count("*").alias("rows_in"),
         F.sum(F.when(F.col("op") != "D", 1).otherwise(0)).alias("rows_upserted"),
         F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("rows_deleted"),
-        F.lit(committed_at_snapshot).alias("committed_at_snapshot"),
-    )
-    return agg.select(
-        [F.col(f.name).cast(f.dataType).alias(f.name) for f in LEDGER_SCHEMA.fields]
-    )
+    ]
+    if "payload_version" in batch.columns:
+        aggs.append(F.max("payload_version").alias("max_payload_version"))
+    return [r.asDict() for r in batch.groupBy("source_partition").agg(*aggs).collect()]
 
 
-def resume_offsets(ledger: LakeTable) -> dict[int, int]:
-    """source_partition → max committed event_seq (the restart point)."""
-    rows = (
-        ledger.read()
-        .groupBy("source_partition")
-        .agg(F.max("max_event_seq").alias("m"))
-        .collect()
-    )
-    return {r["source_partition"]: r["m"] for r in rows}
+def resume_offsets(table: LakeTable) -> dict[int, int]:
+    """source_partition → max committed event_seq (the restart point),
+    read from the head manifest — no Spark job."""
+    offsets = table.current_snapshot()["summary"].get("source_offsets", {})
+    return {int(p): o for p, o in offsets.items()}

@@ -21,8 +21,10 @@ Stage order per batch (order chosen for scale):
    post-dedup transform — once per SURVIVING key, not once per event,
    and only where no already-extracted text exists (rows that lost to
    stored state never reach the UDF);
-6. bucketed copy-on-write write (touched buckets only, optional salt);
-7. lineage-ledger append for the same epoch.
+6. bucketed copy-on-write write (touched buckets only, optional salt)
+   and ONE manifest claim, which also carries the epoch's per-partition
+   source lineage (ledger.py) — no second commit, so no crash window
+   between the data and its resume offsets.
 """
 
 from __future__ import annotations
@@ -61,7 +63,11 @@ def apply_changelog_batch(
     delta file groups instead of rewriting touched buckets — see
     LakeTable.merge_changelog. The extract-at-write text UDF then runs
     on batch winners only (stored rows are never rewritten), shrinking
-    per-epoch UDF work along with the write amplification."""
+    per-epoch UDF work along with the write amplification.
+
+    ``batch`` needs CHANGELOG_SCHEMA's ``source_partition``: the data
+    commit records the batch's per-partition lineage. ``ledger`` is
+    deprecated and ignored (``ledger.resume_offsets(table)`` reads it)."""
     if epoch_id in table.committed_epochs():
         return {"skipped": True, "epoch_id": epoch_id}
 
@@ -73,9 +79,12 @@ def apply_changelog_batch(
             batch, snap["key"], snap["n_buckets"]
         )
 
+    # one job: per-partition lineage, carrying the max payload version
+    sources = ledger_rows_for_batch(batch)
+    versions = [s.pop("max_payload_version", None) for s in sources]
     extra_cols: list[str] = []
     if registry is not None:
-        max_v = batch.agg(F.max("payload_version")).collect()[0][0]
+        max_v = max((v for v in versions if v is not None), default=None)
         if max_v is not None:
             # one registry collect per batch, shared by ALTER and parse
             changes = registry_changes(registry, max_v)
@@ -90,7 +99,7 @@ def apply_changelog_batch(
 
     # No batch-level cache here: merge_changelog caches the batch∪stored
     # union itself (the thing its LWW plan scans repeatedly); the only
-    # other batch consumers — the touched-bucket probe and the ledger
+    # other batch consumers — the touched-bucket probe and the lineage
     # aggregate — read one or two skinny columns that parquet column
     # pruning makes cheap to rescan.
     projected = batch.select(*_CORE_COLS, *extra_cols)
@@ -117,14 +126,11 @@ def apply_changelog_batch(
             "text", F.coalesce(F.col("text"), extract_text_udf(gated))
         )
 
-    result = table.merge_changelog(
+    return table.merge_changelog(
         projected.withColumn("text", F.lit(None).cast("string")),
         epoch_id=epoch_id,
         salt_partitions=salt_partitions,
         pre_write_transform=_extract_at_write,
         write_mode=write_mode,
+        sources=sources,
     )
-    if ledger is not None and not result.get("skipped"):
-        rows = ledger_rows_for_batch(batch, epoch_id, result["snapshot_id"])
-        ledger.append(rows, epoch_id=epoch_id)
-    return result

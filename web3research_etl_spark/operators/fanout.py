@@ -40,7 +40,6 @@ def apply_fanout_batch(
     epoch_id: int,
     discriminator,
     routes: dict[str, Callable[[DataFrame], DataFrame]] | None = None,
-    ledgers: dict[str, LakeTable] | None = None,
     registry: DataFrame | None = None,
     salt_partitions: int | str | None = None,
     on_route_committed: Callable[[str, dict], None] | None = None,
@@ -57,8 +56,8 @@ def apply_fanout_batch(
     ``on_route_committed(route, result)`` fires after each table's
     commit (metrics hook; the crash test raises from it).
 
-    ``apply_fn(table, df, epoch_id, ledger=, registry=,
-    salt_partitions=)`` overrides the per-table apply — default is the
+    ``apply_fn(table, df, epoch_id, registry=, salt_partitions=)``
+    overrides the per-table apply — default is the
     full pages pipeline (apply_changelog_batch: registry sync + fused
     LWW + extraction); pass a thin ``merge_changelog`` wrapper for
     tables with a non-pages schema."""
@@ -75,11 +74,7 @@ def apply_fanout_batch(
         for r in route_names:
             if r not in routed:
                 continue
-            kwargs = dict(
-                ledger=(ledgers or {}).get(r),
-                registry=registry,
-                salt_partitions=salt_partitions,
-            )
+            kwargs = dict(registry=registry, salt_partitions=salt_partitions)
             if write_mode is not None:
                 # only forwarded when set so a custom apply_fn without
                 # the kwarg keeps working in the default cow world
@@ -166,7 +161,6 @@ def run_fanout_sync(
     checkpoint_dir: str,
     discriminator,
     routes: dict[str, Callable[[DataFrame], DataFrame]] | None = None,
-    ledgers: dict[str, LakeTable] | None = None,
     registry: DataFrame | None = None,
     salt_partitions: int | str | None = None,
     available_now: bool = True,
@@ -188,7 +182,6 @@ def run_fanout_sync(
             epoch_id=epoch_id,
             discriminator=discriminator,
             routes=routes,
-            ledgers=ledgers,
             registry=registry,
             salt_partitions=salt_partitions,
         )

@@ -67,9 +67,9 @@ REGISTRY_SCHEMA = T.StructType(
 )
 
 # ---------------------------------------------------------------------------
-# lineage_ledger — per-partition checkpoint/metrics (FIXTURES.md §4). The
-# reference's resume state is a single max(number) probe
-# (/root/reference/src/ch_eth/sync.rs:341-343); ours is per-source-partition.
+# lineage_ledger — the table shape of the deprecated ``ledger.open_ledger``.
+# No engine path writes it: per-partition lineage now rides in each data
+# commit's manifest (FIXTURES.md §4, ledger.py).
 # ---------------------------------------------------------------------------
 LEDGER_SCHEMA = T.StructType(
     [

@@ -120,6 +120,9 @@ def run_sync(
     """Start the streaming apply. With ``available_now`` the query drains
     everything present and stops (bounded backfill); otherwise it tails.
 
+    ``ledger`` is deprecated and ignored: each epoch's data commit
+    carries its source lineage (``ledger.resume_offsets(table)``).
+
     ``feed_dir`` turns the pipeline into a CDC *producer* as well as a
     consumer: after each epoch's merge commits, the snapshot's
     incremental diff is published to the materialized change feed
@@ -307,7 +310,6 @@ def run_sync(
             table,
             batch_df,
             epoch_id=epoch_base + epoch_id,
-            ledger=ledger,
             registry=registry,
             salt_partitions=salt_partitions,
             write_mode=write_mode,
